@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Small shared relational patterns. */
 object Relational {
@@ -13,6 +14,14 @@ object Relational {
     * query. */
   def withGlobal(df: DataFrame, agg: Column): DataFrame =
     df.crossJoin(broadcast(df.agg(agg)))
+
+  /** A local relation over already-collected `rows` on `spark`: the
+    * plan holds the rows themselves, so it outlives whatever produced
+    * them (a memory sink's view, persisted blocks, a dropped table) and
+    * runs under `spark`'s confs. Callers bound `rows` — this is for
+    * small driver-side results, never a corpus. */
+  def localize(spark: SparkSession, rows: Array[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   private val SaltCol = "__graft_salt"
 

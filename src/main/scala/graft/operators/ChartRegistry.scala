@@ -60,8 +60,7 @@ object ChartRegistry {
         fixtureCache.keys.filter(_._1.sparkContext.isStopped)
           .foreach(fixtureCache.remove)
       val plan = aggregatesPlan(spark, sf)
-      val rows = plan.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), plan.schema)
+      graft.functions.Relational.localize(spark, plan.collect(), plan.schema)
     })
 
   /** Deterministic aggregate-table fixture (see object doc) — the

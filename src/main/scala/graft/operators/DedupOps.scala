@@ -1432,8 +1432,7 @@ object DedupOps {
         .as(Seq("table", "bucket"))).persist()
     try {
       val out = portableFunnel(docs, bandRel, fps, annBanded)
-      val rows = out.collect()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+      graft.functions.Relational.localize(spark, out.collect(), out.schema)
     } finally {
       bandRel.unpersist(); fps.unpersist(); annBanded.unpersist()
     }
@@ -1608,7 +1607,7 @@ object DedupOps {
       graft.sources.SignatureLake.portableFingerprints(spark, sf),
       graft.sources.SignatureLake.portableAnnBuckets(spark, sf),
       setsRel = Some(graft.sources.SignatureLake.shingleSets(spark, sf)))
-    spark.createDataFrame(java.util.Arrays.asList(out.collect(): _*), out.schema)
+    graft.functions.Relational.localize(spark, out.collect(), out.schema)
   }
 
   /** Audit floor for d06p's emitted pairs: low enough that the fixed

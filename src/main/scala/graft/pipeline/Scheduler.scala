@@ -69,8 +69,7 @@ final class HourlyScheduler(
               s"rows — the aggregate grain is per-topic, so this means " +
               s"either a grain regression in HourlyAggregate or a topic " +
               s"cardinality this deployment must raise maxDriverRows for")
-          (spark.createDataFrame(
-            java.util.Arrays.asList(collected: _*), agg.schema),
+          (graft.functions.Relational.localize(spark, collected, agg.schema),
             collected.length.toLong)
         } finally {
           enriched.unpersist()

@@ -1,19 +1,25 @@
 package graft.streaming
 
+import java.nio.file.{DirectoryNotEmptyException, Files, NoSuchFileException, Path, Paths}
 import java.sql.Timestamp
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.{GraftQuery, Tables}
+import graft.functions.Relational.localize
 import graft.operators.TemporalOps
 import StatefulOps.{AttrEvent, TypedEvent}
 
 /** Deterministic batch-replay of the streaming state machines — the
   * driver-gate rows that prove STREAM-BATCH PARITY to the oracle, not
-  * just to ScalaTest (r8 verdict item 5): each st* row feeds a
+  * just to ScalaTest (a parity claim only unit tests see is never
+  * hash-checked against the oracle): each st* row feeds a
   * deterministic slice of the events table through the real
   * Structured Streaming operator (MemoryStream → micro-batches → a
   * real watermark schedule → memory sink), collects the
@@ -51,8 +57,8 @@ object StreamReplay {
     * mid-stream finalizations on every machine; the finalized OUTPUT
     * is schedule-independent by the parity theorem the rows prove, and
     * the ×300 random-schedule Stream*Specs keep proving it across
-    * chunkings — 6 → 4 only drops a third of the fixed state-store
-    * commits from the audit fixture (r9 verdict item 4). */
+    * chunkings — so the fixture pays no more fixed state-store commits
+    * than the mid-stream finalizations need. */
   val ReplayChunks = 4
 
   /** Deterministic user-slice modulus (mirrored in the oracles). */
@@ -63,38 +69,95 @@ object StreamReplay {
 
   /** /dev/shm-backed EPHEMERAL checkpoint dir (platform temp
     * fallback) — replay checkpoints are throwaway scratch, and tmpfs
-    * spares the offset/commit/state fsyncs; production streams
-    * checkpoint to durable storage (TweetIngest). One definition for
-    * every replay row (st12–st18 had inline copies — a cleanup fix
-    * must not need N edits). */
-  private def scratchCkptDir(prefix: String): java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm))
-      java.nio.file.Files.createTempDirectory(shm, prefix)
-    else java.nio.file.Files.createTempDirectory(prefix)
+    * spares the offset/commit/state fsyncs (about 0.8 s a row against
+    * disk temp); production streams checkpoint to durable storage
+    * (TweetIngest). Only [[replay]] creates one, so every row's
+    * checkpoint lives in the same place. */
+  private def scratchCkptDir(prefix: String): Path = {
+    val shm = Paths.get("/dev/shm")
+    if (Files.isDirectory(shm)) Files.createTempDirectory(shm, prefix)
+    else Files.createTempDirectory(prefix)
   }
 
-  /** Depth-first delete of a scratch dir. Tolerates already-missing
-    * entries; the state-store straggler RETRY (a provider re-creating
-    * a file between walk and delete) lives only in the replay
-    * harness's own sweep, which is the one place it was observed. */
-  private def rmScratch(d: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val walk = java.nio.file.Files.walk(d)
-    try walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
-    finally walk.close()
+  /** Depth-first delete of a scratch dir, tolerating already-missing
+    * entries. `q.stop()` returns before the state store's async unload
+    * finishes, so a provider can re-create a file between the walk and
+    * the delete (seen in CI as DirectoryNotEmptyException on
+    * state/0/0): one bounded retry after a short pause clears the
+    * straggler, and a directory that STILL will not empty is left
+    * behind rather than failing the row — scratch is throwaway. */
+  private def rmScratch(d: Path): Unit = {
+    def sweep(): Boolean =
+      try {
+        val walk = Files.walk(d)
+        try walk.iterator().asScala.toSeq.sortBy(-_.getNameCount)
+          .foreach(p => Files.deleteIfExists(p))
+        finally walk.close()
+        true
+      } catch {
+        case _: DirectoryNotEmptyException => false
+        case _: NoSuchFileException => true
+      }
+    if (!sweep()) { Thread.sleep(200); sweep() }
+  }
+
+  /** The one stream-replay harness every st* row runs through: each of
+    * `batches` enters a MemoryStream as exactly one micro-batch, in
+    * order, and flows into the sink `sink` attaches to the source
+    * Dataset (a memory sink or a `foreachBatch`), checkpointing to a
+    * fresh scratch dir named by `prefix`. However the run ends, the
+    * query is stopped and the checkpoint deleted; a sink failure
+    * surfaces from `processAllAvailable` with its cause kept. */
+  private[streaming] def replay[T: Encoder](spark: SparkSession,
+      prefix: String, batches: Seq[Seq[T]])(
+      sink: Dataset[T] => DataStreamWriter[_]): Unit = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val source = MemoryStream[T]
+    val ckpt = scratchCkptDir(prefix)
+    try {
+      val q = sink(source.toDS())
+        .option("checkpointLocation", ckpt.toString).start()
+      try batches.foreach { b => source.addData(b: _*); q.processAllAvailable() }
+      finally q.stop()
+    } finally rmScratch(ckpt)
+  }
+
+  /** `xs` as three chronological micro-batches (fewer when `xs` has
+    * fewer than three elements, none when it is empty). */
+  private def thirds[T](xs: Seq[T]): Seq[Seq[T]] =
+    xs.grouped(math.max(1, (xs.size + 2) / 3)).toSeq
+
+  /** A throwaway lake table name for one row run: pid- and
+    * session-scoped like the lake's own tables, so concurrent JVMs and
+    * bench reps never share one. */
+  private def scratchTable(kind: String, sf: String): String =
+    s"graft_lake_${kind}_${sf.replaceAll("[^A-Za-z0-9]+", "_")}" +
+      s"_p${ProcessHandle.current().pid()}_s${nameCounter.incrementAndGet()}"
+
+  /** Run `body` with `confs` set on the session, then put every key
+    * back as it was — its earlier explicit value, or unset if it had
+    * none — however `body` ends. */
+  private def withConfs[A](spark: SparkSession, confs: Seq[(String, String)])(
+      body: => A): A = {
+    val explicit = spark.conf.getAll
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally confs.foreach { case (k, _) =>
+      explicit.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None => spark.conf.unset(k)
+      }
+    }
   }
 
   /** st12's streamed ingest unit (explicit product encoder — tuple
     * encoders for Seq-valued fields don't derive inside the lambda). */
   final case class EmbRow(vec_id: Long, v: Seq[Double])
-  private implicit val embRowEnc: org.apache.spark.sql.Encoder[EmbRow] =
-    org.apache.spark.sql.Encoders.product[EmbRow]
+  private implicit val embRowEnc: Encoder[EmbRow] = Encoders.product[EmbRow]
 
   /** Collected schedules memoized per (session, sf): all st* rows
     * replay the SAME slice, so the sort+collect job runs once and the
-    * later five rows start at addData (the SignatureLake first-consumer
+    * later rows start at addData (the SignatureLake first-consumer
     * pattern, driver-side because a replay schedule is driver data by
     * nature — the slice is a bounded audit fixture). Entries of
     * stopped sessions are swept on access. */
@@ -124,21 +187,37 @@ object StreamReplay {
     })
   }
 
-  /** Run `build`'s stream over the replay schedule and return the
-    * finalized output rows (sentinel rows included — callers filter on
-    * their own user column). Shuffle partitions drop to 1 for the
-    * micro-batches (state-store commit cost is per partition per
-    * batch and dominates a fixture-sized batch; single-partition state
-    * changes nothing the rows claim — watermark semantics are
-    * partitioning-independent, and the cross-partition paths stay
-    * covered by the Stream*Specs' default-partitioned schedules) and
-    * restore after; snapshot retention drops to the minimum for the
-    * same reason (the checkpoint is throwaway by design). */
-  /** @param mapBatch per-micro-batch rewrite of the shared schedule
-    *        (st08 injects exact duplicate rows with it) — applied at
-    *        addData time so the memoized schedule itself stays shared
-    *        and untouched */
-  /** @param coarse replay the shared schedule at half density (data
+  /** The session confs st01–st11 replay under, restored afterwards:
+    *  - one shuffle partition: state-store commit cost is per partition
+    *    per batch and dominates a fixture-sized batch; single-partition
+    *    state changes nothing the rows claim (watermark semantics are
+    *    partitioning-independent, and the cross-partition paths stay
+    *    covered by the Stream*Specs' default-partitioned schedules);
+    *  - minimum snapshot retention, since the checkpoint is throwaway;
+    *  - no no-data batches: they exist to fire watermark-only state
+    *    transitions when no further data arrives, and the schedule
+    *    never needs them (the SECOND sentinel batch is a DATA batch
+    *    whose start-of-batch watermark, set by sentinel 1 at +2d,
+    *    already exceeds every real finalization deadline). With
+    *    multi-stateful-operator rows (st10 chains 8 dedup stores) each
+    *    suppressed no-data batch saves a full plan+commit cycle across
+    *    every store: measured st10 13.1 -> 6.9 s, st01 3.3 -> 2.6 s at
+    *    sf0.1. */
+  private val ReplayConfs = Seq(
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.streaming.minBatchesToRetain" -> "1",
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+
+  /** Run `build`'s stream over the replay schedule into a memory sink
+    * and return the finalized output rows as a local relation on
+    * `spark` (sentinel rows included — callers filter on their own user
+    * column).
+    *
+    * @param mapBatch per-micro-batch rewrite of the shared schedule
+    *        (st08 injects exact duplicate rows with it) — applied to a
+    *        copy so the memoized schedule itself stays shared and
+    *        untouched
+    * @param coarse replay the shared schedule at half density (data
     *        chunks merged pairwise, the two sentinels as one batch —
     *        3 micro-batches instead of 6). For the PASS-THROUGH dedup
     *        rows (st09/st10) whose operators emit on arrival, batch
@@ -150,92 +229,26 @@ object StreamReplay {
   private def runReplay[O](spark: SparkSession, sf: String,
       mapBatch: Seq[TypedEvent] => Seq[TypedEvent] = identity,
       coarse: Boolean = false)(
-      build: Dataset[TypedEvent] => Dataset[O]): DataFrame = {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevRetain = spark.conf.getOption("spark.sql.streaming.minBatchesToRetain")
-    val prevNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "1")
-    // No-data batches exist to fire watermark-only state transitions
-    // when no further data arrives — the replay schedule never needs
-    // them (the SECOND sentinel batch is a DATA batch whose start-of-
-    // batch watermark, set by sentinel 1 at +2d, already exceeds every
-    // real finalization deadline), and with multi-stateful-operator
-    // rows (st10 chains 8 dedup stores) each suppressed no-data batch
-    // saves a full plan+commit cycle across every store: measured
-    // st10 13.1 -> 6.9 s, st01 3.3 -> 2.6 s at sf0.1.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
-      val source = MemoryStream[TypedEvent]
-      val name = s"graft_replay_${nameCounter.incrementAndGet()}"
-      // tmpfs spares ~0.8 s/row of offset/commit/state-delta fsyncs
-      // vs disk temp (see scratchCkptDir); deleted below with the
-      // straggler-tolerant sweep.
-      val ckpt = scratchCkptDir(s"graft_replay_$name")
-      try {
-        val q = build(source.toDS())
-          .writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode("append").start()
-        try {
-          val sched0 = schedule(spark, sf)
-          val sched =
-            if (!coarse) sched0
-            else {
-              val (data, sentinels) = sched0.splitAt(sched0.size - 2)
-              data.grouped(2).map(_.flatten).toSeq :+ sentinels.flatten
-            }
-          sched.foreach { batch =>
-            source.addData(mapBatch(batch): _*)
-            q.processAllAvailable()
-          }
-          val out = spark.table(name)
-          // localize: the memory sink's view is dropped before returning
-          spark.createDataFrame(
-            java.util.Arrays.asList(out.collect(): _*), out.schema)
-        } finally {
-          q.stop()
-          spark.catalog.dropTempView(name)
+      build: Dataset[TypedEvent] => Dataset[O]): DataFrame =
+    withConfs(spark, ReplayConfs) {
+      import spark.implicits._
+      val sched = schedule(spark, sf)
+      val batches =
+        if (!coarse) sched
+        else {
+          val (data, sentinels) = sched.splitAt(sched.size - 2)
+          data.grouped(2).map(_.flatten).toSeq :+ sentinels.flatten
         }
-      } finally {
-        // Best-effort cleanup that tolerates the state-store
-        // maintenance thread: q.stop() returns before StateStore's
-        // async unload finishes, so a provider can re-create a file
-        // between our walk and the delete (observed once in CI as
-        // DirectoryNotEmptyException on state/0/0). One bounded retry
-        // after a short pause clears the straggler; a directory that
-        // STILL will not empty is left behind in tmpfs rather than
-        // failing the replay — the checkpoint is throwaway by design.
-        def sweep(): Boolean =
-          try {
-            val walk = java.nio.file.Files.walk(ckpt)
-            try {
-              import scala.jdk.CollectionConverters._
-              walk.iterator().asScala.toSeq
-                .sortBy(-_.getNameCount)
-                .foreach(p => java.nio.file.Files.deleteIfExists(p))
-              true
-            } finally walk.close()
-          } catch {
-            case _: java.nio.file.DirectoryNotEmptyException => false
-            case _: java.nio.file.NoSuchFileException => true
-          }
-        if (!sweep()) { Thread.sleep(200); sweep() }
-      }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevRetain match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.minBatchesToRetain", v)
-        case None => spark.conf.unset("spark.sql.streaming.minBatchesToRetain")
-      }
-      prevNoData match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf.unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
+      val name = s"graft_replay_${nameCounter.incrementAndGet()}"
+      try {
+        replay(spark, s"graft_replay_$name", batches.map(mapBatch))(ds =>
+          build(ds).writeStream.format("memory").queryName(name)
+            .outputMode("append"))
+        val out = spark.table(name)
+        // localize: the memory sink's view is dropped before returning
+        localize(spark, out.collect(), out.schema)
+      } finally spark.catalog.dropTempView(name)
     }
-  }
 
   /** st01 — the q38 transition matrix computed BY THE STREAM: pair
     * rows from [[StatefulOps.transitionStream]] (watermark-finalized,
@@ -719,8 +732,6 @@ object StreamReplay {
       |SELECT CAST((SELECT count(*) FROM ab) AS BIGINT) AS n_postings,
       |       TRUE AS matches_full, srv.n_delta_neighbors
       |FROM srv""".stripMargin) { (spark, sf) =>
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
     import graft.functions.VectorFunctions.toDouble
     import graft.sources.SignatureLake
     val emb = Tables.embeddings(spark, sf)
@@ -728,26 +739,15 @@ object StreamReplay {
     // driver-collected delta fixture, three chronological micro-batches
     val delta = emb.filter(col("vec_id") % 10 === 0)
       .as[EmbRow].collect().sortBy(_.vec_id).toSeq
-    val chunks = delta.grouped(math.max(1, (delta.size + 2) / 3)).toSeq
-    val table = s"graft_lake_st12append_${sf.replaceAll("[^A-Za-z0-9]+", "_")}" +
-      s"_p${ProcessHandle.current().pid()}_s${nameCounter.incrementAndGet()}"
+    val table = scratchTable("st12append", sf)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     SignatureLake.appendEmbeddingDelta(spark, table,
       emb.filter(col("vec_id") % 10 =!= 0)) // generation 0: the base build
     try {
-      val ckpt = scratchCkptDir("graft_st12")
-      try {
-        val source = MemoryStream[EmbRow]
-        val q = source.toDS().toDF("vec_id", "v")
-          .writeStream
-          .foreachBatch((batch: DataFrame, _: Long) =>
-            SignatureLake.appendEmbeddingDelta(spark, table, batch))
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try {
-          chunks.foreach { c => source.addData(c: _*); q.processAllAvailable() }
-        } finally q.stop()
-      } finally rmScratch(ckpt)
+      replay(spark, "graft_st12", thirds(delta))(_.toDF("vec_id", "v")
+        .writeStream
+        .foreachBatch((batch: DataFrame, _: Long) =>
+          SignatureLake.appendEmbeddingDelta(spark, table, batch)))
       val postings = spark.table(table)
       val full = SignatureLake.portableAnnBuckets(spark, sf)
         .select(col("vec_id"), col("table").as("tbl"),
@@ -765,8 +765,7 @@ object StreamReplay {
         .agg(countDistinct(when(col("neighbor_id") % 10 === 0,
           col("neighbor_id"))).as("n_delta_neighbors"))
       val out = conserve.crossJoin(broadcast(serve))
-      spark.createDataFrame(
-        java.util.Arrays.asList(out.collect(): _*), out.schema)
+      localize(spark, out.collect(), out.schema)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
@@ -818,7 +817,6 @@ object StreamReplay {
         |       CAST(0 AS BIGINT) AS n_deleted_neighbors
         |FROM srv""".stripMargin
     }) { (spark, sf) =>
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import graft.functions.VectorFunctions.toDouble
     import graft.operators.DedupOps.{TombMod, TombRem}
@@ -827,9 +825,7 @@ object StreamReplay {
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
     val deleted = emb.filter(col("vec_id") % TombMod === TombRem)
       .select(col("vec_id")).as[Long].collect().sorted.toSeq
-    val chunks = deleted.grouped(math.max(1, (deleted.size + 2) / 3)).toSeq
-    val table = s"graft_lake_st13tomb_${sf.replaceAll("[^A-Za-z0-9]+", "_")}" +
-      s"_p${ProcessHandle.current().pid()}_s${nameCounter.incrementAndGet()}"
+    val table = scratchTable("st13tomb", sf)
     val tomb = s"${table}_tomb"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS $tomb")
@@ -841,20 +837,11 @@ object StreamReplay {
     SignatureLake.appendTombstones(spark, table,
       emb.select(col("vec_id")).limit(0), "vec_id")
     try {
-      val ckpt = scratchCkptDir("graft_st13")
-      try {
-        val source = MemoryStream[Long]
-        val q = source.toDS().toDF("vec_id")
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            SignatureLake.appendTombstones(spark, table, batch, "vec_id"); ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try {
-          chunks.foreach { c => source.addData(c: _*); q.processAllAvailable() }
-        } finally q.stop()
-      } finally rmScratch(ckpt)
+      replay(spark, "graft_st13", thirds(deleted))(_.toDF("vec_id")
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          SignatureLake.appendTombstones(spark, table, batch, "vec_id"); ()
+        })
       val served = SignatureLake.maskTombstones(
         spark.table(table), spark.table(tomb), "vec_id")
       val full = SignatureLake.portableAnnBuckets(spark, sf)
@@ -876,8 +863,7 @@ object StreamReplay {
           coalesce(sum(when(col("neighbor_id") % TombMod === TombRem, 1L)
             .otherwise(0L)), lit(0L)).as("n_deleted_neighbors"))
       val out = conserve.crossJoin(broadcast(serve))
-      spark.createDataFrame(
-        java.util.Arrays.asList(out.collect(): _*), out.schema)
+      localize(spark, out.collect(), out.schema)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $table")
       spark.sql(s"DROP TABLE IF EXISTS $tomb")
@@ -948,7 +934,6 @@ object StreamReplay {
           |       (SELECT CAST(count(*) AS BIGINT) FROM aggregates) AS store_rows
           |FROM processed p""".stripMargin)
     }) { (spark, sf) =>
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import graft.operators.ChartRegistry
     val docs = Tables.documents(spark, sf)
@@ -960,22 +945,13 @@ object StreamReplay {
     sink.append(ChartRegistry.aggregatesPlanFrom(initial))
     val late = docs.filter(isLate).select("doc_id", "source", "text")
       .as[DocRow].collect().sortBy(_.doc_id).toSeq
-    val chunks = late.grouped(math.max(1, (late.size + 2) / 3)).toSeq
-    val staging = java.nio.file.Files
-      .createTempDirectory("graft_st14_staging").toString + "/docs"
-    val ckpt = scratchCkptDir("graft_st14")
+    val staging = Files.createTempDirectory("graft_st14_staging")
     try {
-      val source = MemoryStream[DocRow]
-      val q = source.toDS().toDF("doc_id", "source", "text")
+      replay(spark, "graft_st14", thirds(late))(_.toDF("doc_id", "source", "text")
         .writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          st14UpsertBatch(spark, sink, initial, staging, batch, batchId)
-        }
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try {
-        chunks.foreach { c => source.addData(c: _*); q.processAllAvailable() }
-      } finally q.stop()
+          st14UpsertBatch(spark, sink, initial, s"$staging/docs", batch, batchId)
+        })
       val store = sink.readBack(spark)
       val served = graft.serving.ChartQueries.processData(store)
       val lateBuckets = docs.filter(isLate)
@@ -987,10 +963,8 @@ object StreamReplay {
         .withColumn("recomputed", col("__ch").isNotNull)
         .drop("__ch")
         .crossJoin(broadcast(store.agg(count(lit(1)).as("store_rows"))))
-      spark.createDataFrame(
-        java.util.Arrays.asList(out.collect(): _*), out.schema)
-    } finally Seq(ckpt, java.nio.file.Paths.get(staging).getParent)
-      .foreach(rmScratch)
+      localize(spark, out.collect(), out.schema)
+    } finally rmScratch(staging)
   }
 
   /** st15 — the LEXICAL index joins the stream-maintained-index
@@ -1024,37 +998,25 @@ object StreamReplay {
         |             WHERE doc_id % ${graft.operators.DedupOps.DocDeltaMod} = ${graft.operators.DedupOps.DocDeltaRem}) AS n_delta_hits
         |FROM res r""".stripMargin
     }) { (spark, sf) =>
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import graft.operators.SimilarityOps
     import graft.sources.SignatureLake
     val docs = Tables.documents(spark, sf)
     val isDelta = col("doc_id") % graft.operators.DedupOps.DocDeltaMod === graft.operators.DedupOps.DocDeltaRem
-    val table = s"graft_lake_st15terms_${sf.replaceAll("[^A-Za-z0-9]+", "_")}" +
-      s"_p${ProcessHandle.current().pid()}_s${nameCounter.incrementAndGet()}"
+    val table = scratchTable("st15terms", sf)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     SignatureLake.appendTermPostings(spark, table, docs.filter(!isDelta))
     val delta = docs.filter(isDelta).select("doc_id", "source", "text")
       .as[DocRow].collect().sortBy(_.doc_id).toSeq
-    val chunks = delta.grouped(math.max(1, (delta.size + 2) / 3)).toSeq
     try {
-      val ckpt = scratchCkptDir("graft_st15")
-      try {
-        val source = MemoryStream[DocRow]
-        val q = source.toDS().toDF("doc_id", "source", "text")
-          .writeStream
-          .foreachBatch((batch: DataFrame, _: Long) =>
-            SignatureLake.appendTermPostings(spark, table, batch))
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try {
-          chunks.foreach { c => source.addData(c: _*); q.processAllAvailable() }
-        } finally q.stop()
-      } finally rmScratch(ckpt)
+      replay(spark, "graft_st15", thirds(delta))(_.toDF("doc_id", "source", "text")
+        .writeStream
+        .foreachBatch((batch: DataFrame, _: Long) =>
+          SignatureLake.appendTermPostings(spark, table, batch)))
       // post-stream maintenance write: materialize impacts + champion
       // tier over the streamed lake, then serve off those tables —
-      // the production two-tier serve with no window over the posting
-      // relation on the serve plan (r15)
+      // the production two-tier serve keeps any window over the
+      // posting relation off the serve plan
       val termServe = SignatureLake.writeTermServeTables(spark, table)
       val served = SimilarityOps.bm25RankCappedFromTier(
         SimilarityOps.bm25QueryTerms(docs, SimilarityOps.Bm25QueryMod),
@@ -1063,8 +1025,7 @@ object StreamReplay {
       val out = served.crossJoin(broadcast(
         served.filter(col("doc_id") % graft.operators.DedupOps.DocDeltaMod === graft.operators.DedupOps.DocDeltaRem)
           .agg(count(lit(1)).as("n_delta_hits"))))
-      spark.createDataFrame(
-        java.util.Arrays.asList(out.collect(): _*), out.schema)
+      localize(spark, out.collect(), out.schema)
     } finally Seq(table, s"${table}_si", s"${table}_tier")
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
@@ -1095,51 +1056,39 @@ object StreamReplay {
         |             WHERE doc_id % ${graft.operators.DedupOps.DocDeltaMod} = ${graft.operators.DedupOps.DocDeltaRem}) AS n_delta_docs
         |FROM res r""".stripMargin
     }) { (spark, sf) =>
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import graft.operators.MultimodalOps
     import graft.sources.SignatureLake
     val isDelta = col("doc_id") % graft.operators.DedupOps.DocDeltaMod === graft.operators.DedupOps.DocDeltaRem
-    val table = s"graft_lake_st16chunks_${sf.replaceAll("[^A-Za-z0-9]+", "_")}" +
-      s"_p${ProcessHandle.current().pid()}_s${nameCounter.incrementAndGet()}"
+    val table = scratchTable("st16chunks", sf)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     SignatureLake.appendChunkDigests(spark, table,
       MultimodalOps.asCdcPayloads(spark, sf).filter(!isDelta))
     val delta = Tables.documents(spark, sf).filter(isDelta)
       .select("doc_id", "source", "text")
       .as[DocRow].collect().sortBy(_.doc_id).toSeq
-    val chunks = delta.grouped(math.max(1, (delta.size + 2) / 3)).toSeq
     try {
-      val ckpt = scratchCkptDir("graft_st16")
-      try {
-        val source = MemoryStream[DocRow]
-        val q = source.toDS().toDF("doc_id", "source", "text")
-          .writeStream
-          .foreachBatch((batch: DataFrame, _: Long) =>
-            SignatureLake.appendChunkDigests(spark, table,
-              batch.select(col("doc_id"),
-                MultimodalOps.cdcPayloadCol(col("doc_id"), col("text"))
-                  .as("payload"))))
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try {
-          chunks.foreach { c => source.addData(c: _*); q.processAllAvailable() }
-        } finally q.stop()
-      } finally rmScratch(ckpt)
+      replay(spark, "graft_st16", thirds(delta))(_.toDF("doc_id", "source", "text")
+        .writeStream
+        .foreachBatch((batch: DataFrame, _: Long) =>
+          SignatureLake.appendChunkDigests(spark, table,
+            batch.select(col("doc_id"),
+              MultimodalOps.cdcPayloadCol(col("doc_id"), col("text"))
+                .as("payload")))))
       val served = MultimodalOps.cdcReport(spark.table(table))
       val out = served.crossJoin(broadcast(
         served.filter(col("doc_id") % graft.operators.DedupOps.DocDeltaMod === graft.operators.DedupOps.DocDeltaRem)
           .agg(count(lit(1)).as("n_delta_docs"))))
-      spark.createDataFrame(
-        java.util.Arrays.asList(out.collect(): _*), out.schema)
+      localize(spark, out.collect(), out.schema)
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
   /** st17 — takedowns against the LEXICAL index arriving on the
     * stream (st13's device pointed at the term lake, the stream twin
-    * of d34), gated on the PRODUCTION TIER PATH (r16 — the r15
-    * verdict's hole): the term-posting lake is built for the full
-    * corpus and its impact + champion-tier tables are MATERIALIZED
+    * of d34), gated on the PRODUCTION TIER PATH (the materialized
+    * impact + tier tables a deployment serves from, not the
+    * recompute-on-read chain): the term-posting lake is built for the
+    * full corpus and its impact + champion-tier tables are MATERIALIZED
     * (the maintenance-window write — this happens BEFORE the takedown
     * exists, so pre-takedown corpus stats are baked in, exactly the
     * production timeline), then the tombstone batch (doc_id % 7 == 3,
@@ -1169,7 +1118,6 @@ object StreamReplay {
         |SELECT r.*, CAST(0 AS BIGINT) AS n_deleted_results
         |FROM res r""".stripMargin
     }) { (spark, sf) =>
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import graft.operators.DedupOps.{TombMod, TombRem}
     import graft.operators.SimilarityOps
@@ -1177,9 +1125,7 @@ object StreamReplay {
     val docs = Tables.documents(spark, sf)
     val deleted = docs.filter(col("doc_id") % TombMod === TombRem)
       .select(col("doc_id")).as[Long].collect().sorted.toSeq
-    val chunks = deleted.grouped(math.max(1, (deleted.size + 2) / 3)).toSeq
-    val table = s"graft_lake_st17terms_${sf.replaceAll("[^A-Za-z0-9]+", "_")}" +
-      s"_p${ProcessHandle.current().pid()}_s${nameCounter.incrementAndGet()}"
+    val table = scratchTable("st17terms", sf)
     val tomb = s"${table}_tomb"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS $tomb")
@@ -1194,20 +1140,11 @@ object StreamReplay {
     SignatureLake.appendTombstones(spark, table,
       docs.select(col("doc_id")).limit(0), "doc_id")
     try {
-      val ckpt = scratchCkptDir("graft_st17")
-      try {
-        val source = MemoryStream[Long]
-        val q = source.toDS().toDF("doc_id")
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            SignatureLake.appendTombstones(spark, table, batch, "doc_id"); ()
-          }
-          .option("checkpointLocation", ckpt.toString)
-          .start()
-        try {
-          chunks.foreach { c => source.addData(c: _*); q.processAllAvailable() }
-        } finally q.stop()
-      } finally rmScratch(ckpt)
+      replay(spark, "graft_st17", thirds(deleted))(_.toDF("doc_id")
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          SignatureLake.appendTombstones(spark, table, batch, "doc_id"); ()
+        })
       val survivors = docs.filter(col("doc_id") % TombMod =!= TombRem)
       val ranking = SimilarityOps.bm25RankCappedFromTierMasked(
         SimilarityOps.bm25QueryTerms(survivors, SimilarityOps.Bm25QueryMod),
@@ -1217,8 +1154,7 @@ object StreamReplay {
       val out = ranking.crossJoin(broadcast(ranking.agg(
         coalesce(sum(when(col("doc_id") % TombMod === TombRem, 1L)
           .otherwise(0L)), lit(0L)).as("n_deleted_results"))))
-      spark.createDataFrame(
-        java.util.Arrays.asList(out.collect(): _*), out.schema)
+      localize(spark, out.collect(), out.schema)
     } finally Seq(table, s"${table}_si", s"${table}_tier", tomb)
       .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
@@ -1283,15 +1219,13 @@ object StreamReplay {
         |FROM (SELECT query_id, rank, doc_id, score_scaled FROM rkr
         |      WHERE rank <= $Bm25TopK) r, fov""".stripMargin
     }) { (spark, sf) =>
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     import graft.operators.DedupOps.{TombMod, TombRem}
     import graft.operators.SimilarityOps
     import graft.sources.SignatureLake
     val docs = Tables.documents(spark, sf)
     val isDelta = col("doc_id") % graft.operators.DedupOps.DocDeltaMod === graft.operators.DedupOps.DocDeltaRem
-    val table = s"graft_lake_st18terms_${sf.replaceAll("[^A-Za-z0-9]+", "_")}" +
-      s"_p${ProcessHandle.current().pid()}_s${nameCounter.incrementAndGet()}"
+    val table = scratchTable("st18terms", sf)
     val tomb = s"${table}_tomb"
     val g2 = s"${table}_g2"
     val owned = Seq(table, s"${table}_si", s"${table}_tier", tomb,
@@ -1304,29 +1238,19 @@ object StreamReplay {
       val baseDocs = docs.filter(!isDelta).count()
       val delta = docs.filter(isDelta).select("doc_id", "source", "text")
         .as[DocRow].collect().sortBy(_.doc_id).toSeq
-      val chunks = delta.grouped(math.max(1, (delta.size + 2) / 3)).toSeq
       var appendedDocs = 0L
       var midRecuts = 0L
       // ---- append stream: the advisory is consulted PER BATCH and
       // must hold (two counters — the per-batch cost of this policy)
-      val ckpt1 = scratchCkptDir("graft_st18")
-      try {
-        val source = MemoryStream[DocRow]
-        val q = source.toDS().toDF("doc_id", "source", "text")
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            SignatureLake.appendTermPostings(spark, table, batch)
-            appendedDocs += batch.count()
-            if (SimilarityOps.shouldRecutTier(appendedDocs,
-                baseDocs + appendedDocs, takedown = false))
-              midRecuts += 1
-          }
-          .option("checkpointLocation", ckpt1.toString)
-          .start()
-        try {
-          chunks.foreach { c => source.addData(c: _*); q.processAllAvailable() }
-        } finally q.stop()
-      } finally rmScratch(ckpt1)
+      replay(spark, "graft_st18", thirds(delta))(_.toDF("doc_id", "source", "text")
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          SignatureLake.appendTermPostings(spark, table, batch)
+          appendedDocs += batch.count()
+          if (SimilarityOps.shouldRecutTier(appendedDocs,
+              baseDocs + appendedDocs, takedown = false))
+            midRecuts += 1
+        })
       // the pre-stream si/tier materialization read the posting table,
       // so THIS session holds a cached file listing for it — and the
       // micro-batch appends ran through the stream's cloned session,
@@ -1360,19 +1284,11 @@ object StreamReplay {
       val deleted = docs.filter(col("doc_id") % TombMod === TombRem)
         .select(col("doc_id")).as[Long].collect().sorted.toSeq
       var totalRecuts = 0L
-      val ckpt2 = scratchCkptDir("graft_st18")
-      try {
-        val source = MemoryStream[Long]
-        val q = source.toDS().toDF("doc_id")
-          .writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            SignatureLake.appendTombstones(spark, table, batch, "doc_id"); ()
-          }
-          .option("checkpointLocation", ckpt2.toString)
-          .start()
-        try { source.addData(deleted: _*); q.processAllAvailable() }
-        finally q.stop()
-      } finally rmScratch(ckpt2)
+      replay(spark, "graft_st18", Seq(deleted))(_.toDF("doc_id")
+        .writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          SignatureLake.appendTombstones(spark, table, batch, "doc_id"); ()
+        })
       val survivors = docs.filter(col("doc_id") % TombMod =!= TombRem)
       val qts = SimilarityOps.bm25QueryTerms(survivors, SimilarityOps.Bm25QueryMod)
       // the advisory is consulted with the REAL counters (delta since
@@ -1405,8 +1321,7 @@ object StreamReplay {
         .crossJoin(broadcast(served.agg(
           coalesce(sum(when(col("doc_id") % TombMod === TombRem, 1L)
             .otherwise(0L)), lit(0L)).as("n_deleted_results"))))
-      spark.createDataFrame(
-        java.util.Arrays.asList(out.collect(): _*), out.schema)
+      localize(spark, out.collect(), out.schema)
     } finally owned.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 

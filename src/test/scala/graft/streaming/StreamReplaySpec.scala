@@ -23,9 +23,54 @@ class StreamReplaySpec extends SparkSpec {
   }
 
   test("replay restores the session's shuffle-partition conf") {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    StreamReplay.streamGapsQ.run(spark, sf001).collect()
-    assert(spark.conf.get("spark.sql.shuffle.partitions") === before)
+    val retain = "spark.sql.streaming.minBatchesToRetain"
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val keys = Seq("spark.sql.shuffle.partitions", retain, noData)
+    val prior = spark.conf.getAll
+    // one replay conf explicitly set, one unset: both restore paths run
+    spark.conf.set(retain, "7")
+    spark.conf.unset(noData)
+    try {
+      val before = keys.map(spark.conf.getOption)
+      StreamReplay.streamGapsQ.run(spark, sf001).collect()
+      assert(keys.map(spark.conf.getOption) === before)
+      assert(spark.conf.getAll.get(noData) === None,
+        "a conf the session had not set must be unset again after the replay")
+    } finally Seq(retain, noData).foreach { k =>
+      prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
+  test("the replay harness feeds each batch as one micro-batch, keeps a sink failure's cause and cleans up") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.DataFrame
+    import spark.implicits._
+    val prefix = s"graft_harness_spec_${System.nanoTime()}_"
+    val roots = Seq(Paths.get("/dev/shm"), Paths.get(System.getProperty("java.io.tmpdir")))
+      .filter(Files.isDirectory(_))
+    def leftovers(): Seq[String] = roots.flatMap { r =>
+      val ls = Files.list(r)
+      try ls.toArray.map(_.toString).filter(_.contains(prefix)).toSeq finally ls.close()
+    }
+    val batches = Seq(Seq(3L, 1L), Seq(2L), Seq(6L, 4L, 5L))
+    val seen = Seq.newBuilder[(Long, Seq[Long])]
+    StreamReplay.replay(spark, prefix, batches)(_.toDF("v").writeStream
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        seen += id -> b.as[Long].collect().toSeq.sorted; ()
+      })
+    assert(seen.result() === batches.map(_.sorted).zipWithIndex
+      .map { case (b, i) => i.toLong -> b })
+    assert(leftovers().isEmpty, "a finished replay must delete its checkpoint")
+
+    val boom = new IllegalStateException("sink failure")
+    val err = intercept[Exception] {
+      StreamReplay.replay(spark, prefix, batches)(_.toDF("v").writeStream
+        .foreachBatch { (_: DataFrame, _: Long) => throw boom })
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_ eq boom), s"the sink's exception must be the failure's cause: $err")
+    assert(spark.streams.active.isEmpty, "a failed replay must stop its query")
+    assert(leftovers().isEmpty, "a failed replay must delete its checkpoint")
   }
 
   test("st02 stream credits equal the batch q45 relation on the replay slice") {
