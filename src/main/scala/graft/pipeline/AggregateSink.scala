@@ -38,9 +38,12 @@ final class ParquetAggregateSink(path: String) extends AggregateSink {
   * compaction (processData dedups on read); compaction bounds store
   * growth and read cost.
   *
-  * The rewrite is distributed (no driver materialization): compacted
-  * rows land in a fresh generation directory and the swap is two
-  * renames. A crash between the renames leaves `path` absent with the
+  * The rewrite is distributed (no driver materialization): it reads
+  * the serving rule as the lazy
+  * [[graft.serving.ChartQueries.processPlan]], not the driver-collected
+  * processData, so the executors write the compacted rows to a fresh
+  * generation directory, and the swap is two renames. A crash between
+  * the renames leaves `path` absent with the
   * previous generation staged at `path+".old"` — every entry point
   * runs [[recover]] first, which restores the staged generation, so
   * no window silently loses history.
@@ -78,7 +81,7 @@ final class CompactingAggregateSink(
       spark: SparkSession, crashPoint: String => Unit): Unit = {
     recover()
     publishGeneration(graft.serving.ChartQueries
-      .processData(inner.readBack(spark), latestWins = latestWins)
+      .processPlan(inner.readBack(spark), latestWins = latestWins)
       .drop("date_hour", "date", "hour"), // derived on read, not stored
       crashPoint)
   }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The reference's hourly aggregation (SURVEY.md §2.5 A1-A3, §2.4 J1,
@@ -23,12 +23,16 @@ import org.apache.spark.sql.functions._
 object HourlyAggregate {
 
   /** @param enriched rows with at least (topic, sentiment, emotion)
-    * @param stampTime append a current_timestamp() column (parity with
-    *        functions.py:104); off for deterministic oracle runs */
+    * @param stamp appended as `created_at` when given. The reference
+    *        stamps the processing time (functions.py:104);
+    *        HourlyScheduler.runOnce passes the start of the event-hour
+    *        it closes instead, so the serving layer buckets each
+    *        aggregate by its event-hour and a re-run of that hour
+    *        carries the same stamp. Omitted for the oracle runs. */
   def aggregate(
       enriched: DataFrame,
       emotionLabels: Seq[String] = KeywordEmotionClassifier.labels,
-      stampTime: Boolean = false): DataFrame = {
+      stamp: Option[Column] = None): DataFrame = {
     val bySentiment = enriched
       .groupBy(col("topic").as("topic_agg"))
       .agg(
@@ -43,6 +47,6 @@ object HourlyAggregate {
 
     val joined = bySentiment
       .join(byEmotion, bySentiment("topic_agg") === byEmotion("topic"), "inner")
-    if (stampTime) joined.withColumn("created_at", current_timestamp()) else joined
+    stamp.fold(joined)(joined.withColumn("created_at", _))
   }
 }

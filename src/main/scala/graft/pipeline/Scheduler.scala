@@ -35,7 +35,10 @@ final class HourlyScheduler(
       .select(col("created_at"), col("text"), col("topic"),
         col("sentiment"), col("emotion"))
 
-  /** Run one cycle for the hour preceding `now`.
+  /** Run one cycle for the hour preceding `now`. Every aggregate row
+    * is stamped `created_at` = the start of that event-hour (not the
+    * processing time), so charts bucket it by the hour its tweets were
+    * created in, and a re-run of the hour re-appends the same stamp.
     *
     * The enriched frame is persisted across the aggregate's two branch
     * reads and released before returning — a long-lived hourly loop
@@ -56,7 +59,10 @@ final class HourlyScheduler(
       val enriched = enrich(rows).persist(StorageLevel.MEMORY_AND_DISK)
       val (batch, n) =
         try {
-          val agg = HourlyAggregate.aggregate(enriched, stampTime = true)
+          // the event-hour's start, parsed in the session time zone
+          // (the zone the lake's date/hour partitions are cut in)
+          val agg = HourlyAggregate.aggregate(enriched,
+            stamp = Some(to_timestamp(lit(s"$date $hour:00:00"))))
           // bounded-grain contract, ENFORCED (the replaceHours rule —
           // no implicit driver materialization): collect through a
           // limit one past the bound, so a contract violation costs

@@ -4,32 +4,74 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.Relational
 import graft.pipeline.KeywordEmotionClassifier
 
 /** The dashboard's query layer (SURVEY.md §3.3; streamlit/utilities/
   * utilities.py:13-33 + streamlit/charts/charts.py:15-199) as Spark
   * queries over the aggregate table — one function per chart, each
   * returning the exact chart-ready relation the reference computes in
-  * pandas/Altair. All queries run over the (tiny) aggregate relation,
-  * so every window/groupBy here is post-reduction — never on raw data.
+  * pandas/Altair.
+  *
+  * Like the reference dashboard, which pulls the aggregates into one
+  * pandas frame and renders every chart from it (streamlit/main.py:
+  * 34-41), [[processData]] materializes the bounded serving relation
+  * once, as a single-partition local relation: every chart's groupBy,
+  * window and orderBy then plans with no shuffle exchange and runs as
+  * about one job, instead of each chart re-scanning the store and
+  * re-running the dedup window. [[processPlan]] is the same relation
+  * unmaterialized, for distributed rewrites of the store.
   */
 object ChartQueries {
 
   val emotions: Seq[String] = KeywordEmotionClassifier.labels
   private val emotionCols: Seq[Column] = emotions.map(col)
 
+  /** Driver-side bound on the serving relation [[processData]]
+    * collects: one row per (topic, event-hour) kept. A year of hourly
+    * rows for ten topics is 87,600 rows of a few hundred bytes, tens of
+    * MB on the driver; a store that exceeds the bound fails with the
+    * diagnosis instead of growing the driver heap. */
+  val MaxServingRows = 100000
+
+  /** The normalized serving relation, materialized: [[processPlan]]
+    * collected once through a limit one past [[MaxServingRows]] (so a
+    * bound violation costs one extra row, never an unbounded driver
+    * heap, and fails naming the bound) and served as a one-partition
+    * local relation. Eager: the store is read when this is called, and
+    * the result is a snapshot that later appends or compactions do not
+    * change. */
+  def processData(
+      aggregates: DataFrame,
+      excludeTopics: Seq[String] = Nil,
+      latestWins: Boolean = false): DataFrame =
+    processData(aggregates, excludeTopics, latestWins, MaxServingRows)
+
+  private[serving] def processData(
+      aggregates: DataFrame, excludeTopics: Seq[String], latestWins: Boolean,
+      maxRows: Int): DataFrame = {
+    val plan = processPlan(aggregates, excludeTopics, latestWins)
+    val rows = plan.limit(maxRows + 1).collect()
+    require(rows.length <= maxRows,
+      s"ChartQueries.processData: the serving relation exceeds the driver " +
+        s"bound of $maxRows rows — one row per (topic, hour) kept, so the " +
+        s"store holds more topic-hours than the dashboard can serve from " +
+        s"the driver; vacuum old hours or narrow excludeTopics")
+    Relational.localize(aggregates.sparkSession, rows, plan.schema).coalesce(1)
+  }
+
   /** Normalize the raw sink read-back (reference `process_data`,
-    * utilities.py:13-33): derive date_hour/date buckets, dedup
-    * re-appended hourly batches deterministically (earliest created_at
-    * wins — the reference's drop_duplicates keep-first made
-    * deterministic), optionally drop excluded topics, fill missing
-    * emotion columns with 0.
+    * utilities.py:13-33), unmaterialized: derive date_hour/date
+    * buckets, dedup re-appended hourly batches deterministically
+    * (earliest created_at wins — the reference's drop_duplicates
+    * keep-first made deterministic), optionally drop excluded topics,
+    * fill missing emotion columns with 0.
     *
     * @param latestWins reverse the dedup so a corrected re-aggregation
     *        appended later in the same hour supersedes the first write
     *        (the sink contract allows at-least-once re-appends; the
     *        default keeps reference keep-first parity) */
-  def processData(
+  def processPlan(
       aggregates: DataFrame,
       excludeTopics: Seq[String] = Nil,
       latestWins: Boolean = false): DataFrame = {
@@ -55,46 +97,53 @@ object ChartQueries {
       .na.fill(0, emotions)
   }
 
+  private def emotionSums: Seq[Column] = emotions.map(e => sum(col(e)).as(e))
+
+  /** Per-emotion sums per aggregation level, still wide. */
+  private def emotionWide(processed: DataFrame, aggLevel: String): DataFrame =
+    processed.groupBy(col(aggLevel)).agg(emotionSums.head, emotionSums.tail: _*)
+
   /** Emotion columns melted long per aggregation level (charts.py:24-27). */
   def emotionLong(processed: DataFrame, aggLevel: String): DataFrame =
-    processed
-      .groupBy(col(aggLevel))
-      .agg(emotions.map(e => sum(col(e)).as(e)).head,
-        emotions.map(e => sum(col(e)).as(e)).tail: _*)
+    emotionWide(processed, aggLevel)
       .unpivot(Array(col(aggLevel)), emotionCols.toArray, "emotion", "counts")
+
+  /** Melt `wide` (one row per bucket, one column per emotion sum) with
+    * each count's share of its row's total. The total is the exact long
+    * sum of the row's emotion columns, taken before the melt: the melt's
+    * Expand does not keep its input's partitioning, so a share window
+    * after it would shuffle, and one row of a wide frame is exactly one
+    * bucket. */
+  private def meltWithShare(wide: DataFrame, ids: Seq[String]): DataFrame =
+    wide
+      .withColumn("__total", emotionCols.reduce(_ + _))
+      .unpivot((ids :+ "__total").map(col).toArray, emotionCols.toArray, "emotion", "counts")
+      .select(ids.map(col) ++ Seq(col("emotion"), col("counts"),
+        (col("counts") / col("__total")).as("percent")): _*)
 
   /** Per-level emotion share (charts.py:28-29): counts normalized
     * within each aggregation bucket. */
   def emotionShare(processed: DataFrame, aggLevel: String): DataFrame =
-    emotionLong(processed, aggLevel)
-      .withColumn("percent",
-        col("counts") / sum(col("counts")).over(Window.partitionBy(col(aggLevel))))
-
-  /** Grand-total share via Relational.withGlobal (no empty-frame
-    * window, no single-partition WindowExec stage). */
-  private def withShareOfTotal(df: DataFrame, shareCol: String): DataFrame =
-    graft.functions.Relational.withGlobal(df, sum(col("counts")).as("__total"))
-      .withColumn(shareCol, col("counts") / col("__total"))
-      .drop("__total")
+    meltWithShare(emotionWide(processed, aggLevel), Seq(aggLevel))
 
   /** Global emotion distribution for the donut (charts.py:45-60):
-    * total counts per emotion + percent of grand total. */
+    * total counts per emotion + percent of grand total. A global
+    * aggregate over no rows is one row of nulls, which is dropped, so
+    * an empty relation gives an empty donut. */
   def emotionDonut(processed: DataFrame): DataFrame =
-    withShareOfTotal(
-      processed
-        .select(emotionCols: _*)
-        .unpivot(Array.empty, emotionCols.toArray, "emotion", "counts")
-        .groupBy(col("emotion"))
-        .agg(sum(col("counts")).as("counts")),
-      "percent")
+    meltWithShare(
+      processed.agg(emotionSums.head, emotionSums.tail: _*)
+        .filter(col(emotions.head).isNotNull),
+      Nil)
 
-  /** Tweet-volume share per topic for the donut (charts.py:88-94). */
+  /** Tweet-volume share per topic for the donut (charts.py:88-94); the
+    * grand total rides Relational.withGlobal (no empty-frame window). */
   def countsDonut(processed: DataFrame): DataFrame =
-    withShareOfTotal(
-      processed
-        .groupBy(col("topic"))
-        .agg(sum(col("counts")).as("counts")),
-      "percent")
+    Relational.withGlobal(
+        processed.groupBy(col("topic")).agg(sum(col("counts")).as("counts")),
+        sum(col("counts")).as("__total"))
+      .withColumn("percent", col("counts") / col("__total"))
+      .drop("__total")
 
   /** Tweet volume per period (area chart, charts.py:99-106). */
   def countsPeriod(processed: DataFrame, aggLevel: String): DataFrame =
@@ -132,7 +181,7 @@ object ChartQueries {
       .agg(round(sum(scaled).cast("double")
         / (count(col("positivity_rate")) * lit(10000.0)), 4)
         .as("positivity_rate"))
-    graft.functions.Relational.withGlobal(rates,
+    Relational.withGlobal(rates,
       round(sum(scaled).cast("double")
         / (count(col("positivity_rate")) * lit(10000.0)), 4)
         .as("global_rate"))

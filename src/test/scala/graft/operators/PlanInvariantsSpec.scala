@@ -592,7 +592,8 @@ class PlanInvariantsSpec extends SparkSpec {
     // the ONE bare window allowed is processData's keep-first dedup,
     // which runs on the bounded serving relation by design
     assert(aboveAgg.nonEmpty, s"expected histogram windows:\n${wins.mkString("\n")}")
-    // (it appears once per consumer subtree — stats side + keys side)
+    // (processData now collects that dedup before the chart is built,
+    // so the chart's own plan normally holds no bare window at all)
     bare.foreach(w => assert(w.windowExpressions.mkString.contains("row_number"),
       s"unexpected corpus-side window:\n$w"))
     assert(!plan(df).contains("CartesianProduct"))
@@ -744,5 +745,36 @@ class PlanInvariantsSpec extends SparkSpec {
       s"masked-tier serve re-sorts the posting relation:\n${p.take(3000)}")
     assert(p.contains("term_champions"),
       "masked-tier serve must scan the materialized champion tier")
+  }
+
+  test("serving: processData is one partition, and no refresh chart shuffles") {
+    import graft.serving.ChartQueries
+    val processed = ChartQueries.processData(ChartRegistry.aggregates(spark, sf001))
+    assert(processed.rdd.getNumPartitions === 1)
+    // the dashboard refresh's charts, as perfbench's Serving.Charts
+    // lists them: the Global charts, then each at the Day and Hour level
+    val levels = Seq("date", "date_hour")
+    val charts: Seq[(String, DataFrame)] = Seq(
+      "processed" -> processed,
+      "emotion_donut" -> ChartQueries.emotionDonut(processed),
+      "counts_donut" -> ChartQueries.countsDonut(processed),
+      "positivity_topic" -> ChartQueries.positivityByTopic(processed),
+      "boxplot" -> ChartQueries.positivityBoxplot(processed),
+      "latest" -> ChartQueries.latestInputs(processed)) ++
+      levels.flatMap(l => Seq(
+        s"emotion_share_$l" -> ChartQueries.emotionShare(processed, l),
+        s"counts_period_$l" -> ChartQueries.countsPeriod(processed, l),
+        s"counts_topic_period_$l" -> ChartQueries.countsTopicPeriod(processed, l),
+        s"positivity_period_$l" -> ChartQueries.positivityPeriod(processed, l),
+        s"boxplot_$l" -> ChartQueries.positivityBoxplot(processed, Some(l))))
+    assert(charts.size === 16)
+    charts.foreach { case (name, df) =>
+      assert(df.collect().nonEmpty, name)
+      // BroadcastExchange is allowed: a broadcast of a one-row total or
+      // a join side is no shuffle of the serving relation
+      val p = df.queryExecution.executedPlan.toString
+      Seq("Exchange hashpartitioning", "rangepartitioning", "Exchange SinglePartition")
+        .foreach(bad => assert(!p.contains(bad), s"$name plans $bad:\n$p"))
+    }
   }
 }

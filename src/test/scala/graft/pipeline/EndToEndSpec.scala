@@ -60,6 +60,10 @@ class EndToEndSpec extends SparkSpec {
 
     val raw = sink.readBack(spark)
     assert(raw.count() === 4) // duplicated batch in the sink
+    // every row is stamped with the event-hour it aggregates (10:00),
+    // not the processing time, so a replay shares its hour's stamp
+    assert(raw.select("created_at").distinct().collect()
+      .map(_.getTimestamp(0).toInstant.toString).toSeq === Seq("2022-03-01T10:00:00Z"))
 
     // 3. serving layer dedups the replay
     val processed = ChartQueries.processData(raw)
@@ -139,8 +143,10 @@ class EndToEndSpec extends SparkSpec {
 
     // batch 1 lands at 11:00:05; a late-data backfill re-aggregates the
     // same event hour and appends at 11:40 with corrected counts —
-    // deterministic stamps instead of runOnce's current_timestamp so
-    // the dedup window (topic, date_hour=11:00) is fixed by fixture
+    // explicit stamps instead of runOnce's event-hour stamp (which
+    // would give both batches 10:00 and leave only counts to order
+    // them), so both share the dedup window (topic, date_hour=11:00)
+    // and the correction is strictly later
     val batch1 = HourlyAggregate.aggregate(enriched)
       .withColumn("created_at", lit(Timestamp.valueOf("2022-03-01 11:00:05")))
     sink.append(batch1)

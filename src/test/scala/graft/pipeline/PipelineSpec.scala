@@ -35,10 +35,15 @@ class PipelineSpec extends SparkSpec {
     assert(beta.getAs[Long]("sadness") === 2)
   }
 
-  test("aggregate with stampTime appends created_at") {
-    val out = HourlyAggregate.aggregate(enrichedFixture, stampTime = true)
+  test("aggregate with an explicit stamp appends it as created_at") {
+    val out = HourlyAggregate.aggregate(enrichedFixture,
+      stamp = Some(to_timestamp(lit("2022-03-01 10:00:00"))))
     assert(out.columns.contains("created_at"))
-    assert(out.select("created_at").distinct().count() === 1)
+    val stamps = out.select("created_at").distinct().collect()
+    // parsed in the session time zone (UTC in every graft session)
+    assert(stamps.map(_.getTimestamp(0).toInstant.toString).toSeq ===
+      Seq("2022-03-01T10:00:00Z"))
+    assert(!HourlyAggregate.aggregate(enrichedFixture).columns.contains("created_at"))
   }
 
   test("lexicon sentiment: positive wins ties, negatives flip") {
