@@ -10,8 +10,10 @@ object Relational {
   /** Append a scalar aggregate of `df` (aliased Column) to every row —
     * the empty-frame-window (`… OVER ()`) alternative that avoids a
     * single-partition WindowExec: the one-row aggregate broadcasts and
-    * cross-joins back. Used by every grand-total share / global-mean
-    * query. */
+    * cross-joins back. For grand totals over a partitioned relation
+    * (CoreQueries' share and global-mean rows); over a one-partition
+    * relation a keyless window plans neither the join nor an exchange,
+    * so the dashboard charts use that instead. */
   def withGlobal(df: DataFrame, agg: Column): DataFrame =
     df.crossJoin(broadcast(df.agg(agg)))
 

@@ -11,11 +11,11 @@ import graft.pipeline.{HourlyAggregate, KeywordEmotionClassifier, LexiconSentime
   * queries (SURVEY.md §3.2/§3.3), run over the documents corpus with
   * `source` standing in for the tracked topic:
   *
-  *   classify (sentiment + emotion) → per-topic aggregate join →
+  *   classify (sentiment + emotion) → per-topic aggregate →
   *   chart-shaped serving relations.
   *
   * The classifier stage is deterministic (see graft.pipeline), so the
-  * whole pipeline — enrichment, both aggregates, pivot, join, melt,
+  * whole pipeline — enrichment, the per-topic aggregate, pivot, melt,
   * share windows — is oracle-checked end-to-end against DuckDB SQL
   * generated from the same lexicon/keyword constants.
   */
@@ -61,8 +61,9 @@ object ServingQueries {
       .select(col("topic"), col("sentiment"), col("emotion"))
   }
 
-  /** Full pipeline parity query: classify → positivity ⋈ emotion pivot
-    * (reference functions.py:97-117 minus the timestamp stamp). */
+  /** Full pipeline parity query: classify → per-topic positivity and
+    * emotion histogram (reference functions.py:97-117 minus the
+    * timestamp stamp; the oracle keeps the reference's join shape). */
   val pipelineAggregateQ: GraftQuery = GraftQuery(
     "p01_pipeline_aggregate",
     s"""WITH $enrichedSql,

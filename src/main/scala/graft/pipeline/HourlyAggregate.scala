@@ -5,20 +5,19 @@ import org.apache.spark.sql.functions._
 
 /** The reference's hourly aggregation (SURVEY.md §2.5 A1-A3, §2.4 J1,
   * spark_app/functions/functions.py:97-117): per-topic positivity rate
-  * joined with the per-topic emotion histogram pivoted wide.
+  * beside the per-topic emotion histogram, wide.
   *
-  * Improvements over the reference (SURVEY.md §3.2-8, §4):
-  *  - the pivot carries the explicit label list — static output schema,
-  *    no eager distinct-values job;
-  *  - null-safe equality (`<=>`) on the sentiment indicator preserved.
-  *
-  * The enriched input is read by BOTH aggregate branches; callers that
-  * execute the result (HourlyScheduler.runOnce) persist it across the
-  * fan-out and release it after the sink write — persisting here would
-  * leak the cache (nobody could unpersist it).
-  *
-  * Both aggregate outputs are ≤ |topics| rows, so Catalyst broadcast-
-  * joins them regardless of input scale.
+  * The reference computes the two as separate aggregates and
+  * inner-joins them on topic; here they are one `groupBy(topic)`
+  * aggregate with one conditional count per emotion label, so the
+  * input is read once and the plan holds no join. Kept from the
+  * reference's shape:
+  *  - the output columns and their order (`topic_agg`, the rate,
+  *    `counts`, `topic`, one column per label);
+  *  - NULL topics are dropped, as the join's `===` dropped them;
+  *  - null-safe equality (`<=>`) on the sentiment indicator;
+  *  - the explicit label list gives a static output schema with no
+  *    distinct-values job.
   */
 object HourlyAggregate {
 
@@ -33,20 +32,15 @@ object HourlyAggregate {
       enriched: DataFrame,
       emotionLabels: Seq[String] = KeywordEmotionClassifier.labels,
       stamp: Option[Column] = None): DataFrame = {
-    val bySentiment = enriched
-      .groupBy(col("topic").as("topic_agg"))
+    val agg = enriched
+      .filter(col("topic").isNotNull)
+      .groupBy(col("topic"))
       .agg(
         round(avg(when(col("sentiment") <=> "positive", 1).otherwise(0)), 2).as("positivity_rate"),
-        count(col("topic")).as("counts"))
-
-    val byEmotion = enriched
-      .groupBy(col("topic"))
-      .pivot("emotion", emotionLabels)
-      .count()
-      .na.fill(0)
-
-    val joined = bySentiment
-      .join(byEmotion, bySentiment("topic_agg") === byEmotion("topic"), "inner")
-    stamp.fold(joined)(joined.withColumn("created_at", _))
+        (count(col("topic")).as("counts") +:
+          emotionLabels.map(l => count(when(col("emotion") === l, 1)).as(l))): _*)
+      .select((Seq(col("topic").as("topic_agg"), col("positivity_rate"),
+        col("counts"), col("topic")) ++ emotionLabels.map(col)): _*)
+    stamp.fold(agg)(agg.withColumn("created_at", _))
   }
 }

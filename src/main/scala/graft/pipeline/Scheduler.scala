@@ -4,7 +4,6 @@ import java.time.LocalDateTime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.streaming.{HourlyClock, TweetIngest}
 
@@ -40,49 +39,38 @@ final class HourlyScheduler(
     * processing time), so charts bucket it by the hour its tweets were
     * created in, and a re-run of the hour re-appends the same stamp.
     *
-    * The enriched frame is persisted across the aggregate's two branch
-    * reads and released before returning — a long-lived hourly loop
-    * must not accumulate one cached DataFrame per cycle. The aggregate
-    * (≤ |topics| rows by construction — the broadcast-join of two
-    * per-topic relations) is materialized ONCE with a single action and
-    * appended as a local relation: the row count is free, a failed
-    * append can be retried without recomputation, and no Observation
-    * listener is left registered when the sink throws (Spark offers no
-    * public unregister for an un-fired Observation).
+    * The aggregate is one per-topic grouping (≤ |topics| rows by
+    * construction), so the enriched frame is read once, by the single
+    * action that materializes the aggregate; nothing is persisted. The
+    * collected rows are appended as a local relation: the row count is
+    * free, a failed append can be retried without recomputation, and
+    * no Observation listener is left registered when the sink throws
+    * (Spark offers no public unregister for an un-fired Observation).
     *
-    * @return number of aggregate rows appended (0 = empty partition) */
+    * @return number of aggregate rows appended (0 = empty partition,
+    *         and nothing is appended) */
   def runOnce(now: LocalDateTime): Long = {
     val (date, hour) = HourlyClock.previousHour(now)
-    val rows = TweetIngest.readHour(spark, lakeRoot, date, hour)
-    if (rows.isEmpty) 0L
-    else {
-      val enriched = enrich(rows).persist(StorageLevel.MEMORY_AND_DISK)
-      val (batch, n) =
-        try {
-          // the event-hour's start, parsed in the session time zone
-          // (the zone the lake's date/hour partitions are cut in)
-          val agg = HourlyAggregate.aggregate(enriched,
-            stamp = Some(to_timestamp(lit(s"$date $hour:00:00"))))
-          // bounded-grain contract, ENFORCED (the replaceHours rule —
-          // no implicit driver materialization): collect through a
-          // limit one past the bound, so a contract violation costs
-          // one extra row, never an unbounded driver heap, and fails
-          // with the diagnosis instead of an OOM.
-          val collected = agg.limit(maxDriverRows + 1).collect()
-          require(collected.length <= maxDriverRows,
-            s"HourlyScheduler.runOnce: hourly aggregate for $date $hour:00 " +
-              s"exceeds the per-(topic, hour) driver bound of $maxDriverRows " +
-              s"rows — the aggregate grain is per-topic, so this means " +
-              s"either a grain regression in HourlyAggregate or a topic " +
-              s"cardinality this deployment must raise maxDriverRows for")
-          (graft.functions.Relational.localize(spark, collected, agg.schema),
-            collected.length.toLong)
-        } finally {
-          enriched.unpersist()
-        }
-      sink.append(batch)
-      n
-    }
+    // the event-hour's start, parsed in the session time zone (the
+    // zone the lake's date/hour partitions are cut in)
+    val agg = HourlyAggregate.aggregate(
+      enrich(TweetIngest.readHour(spark, lakeRoot, date, hour)),
+      stamp = Some(to_timestamp(lit(s"$date $hour:00:00"))))
+    // bounded-grain contract, ENFORCED (the replaceHours rule — no
+    // implicit driver materialization): collect through a limit one
+    // past the bound, so a contract violation costs one extra row,
+    // never an unbounded driver heap, and fails with the diagnosis
+    // instead of an OOM.
+    val collected = agg.limit(maxDriverRows + 1).collect()
+    require(collected.length <= maxDriverRows,
+      s"HourlyScheduler.runOnce: hourly aggregate for $date $hour:00 " +
+        s"exceeds the per-(topic, hour) driver bound of $maxDriverRows " +
+        s"rows — the aggregate grain is per-topic, so this means " +
+        s"either a grain regression in HourlyAggregate or a topic " +
+        s"cardinality this deployment must raise maxDriverRows for")
+    if (collected.nonEmpty)
+      sink.append(graft.functions.Relational.localize(spark, collected, agg.schema))
+    collected.length.toLong
   }
 
   /** Fire once per wall-clock hour change (reference main.py:96-111),
@@ -117,8 +105,8 @@ final class HourlyScheduler(
 
 object HourlyScheduler {
   /** Driver-side bound on one cycle's aggregate (rows per hour = rows
-    * per topic by construction — HourlyAggregate joins two per-topic
-    * relations). The collect at [[HourlyScheduler.runOnce]] is sized by
+    * per topic by construction — HourlyAggregate is one per-topic
+    * grouping). The collect at [[HourlyScheduler.runOnce]] is sized by
     * this, and a cycle whose aggregate exceeds it FAILS with the
     * diagnosis instead of growing the driver heap: at a few hundred
     * bytes per aggregate row, 10k rows is ~MBs — far under any driver

@@ -67,10 +67,14 @@ object ChartQueries {
     * keep-first made deterministic), optionally drop excluded topics,
     * fill missing emotion columns with 0.
     *
-    * @param latestWins reverse the dedup so a corrected re-aggregation
-    *        appended later in the same hour supersedes the first write
-    *        (the sink contract allows at-least-once re-appends; the
-    *        default keeps reference keep-first parity) */
+    * @param latestWins reverse the dedup, so of a topic-hour's rows the
+    *        one with the latest `created_at` is kept (the default keeps
+    *        reference keep-first parity). Known fault, open: a re-run
+    *        of an event-hour through HourlyScheduler.runOnce carries the
+    *        same `created_at` (the event-hour's start) as its first
+    *        append, so the order falls to `counts` and the larger count
+    *        wins whichever was appended later; a correction that lowers
+    *        a count (e.g. one that drops redelivered tweets) loses. */
   def processPlan(
       aggregates: DataFrame,
       excludeTopics: Seq[String] = Nil,
@@ -136,14 +140,16 @@ object ChartQueries {
         .filter(col(emotions.head).isNotNull),
       Nil)
 
-  /** Tweet-volume share per topic for the donut (charts.py:88-94); the
-    * grand total rides Relational.withGlobal (no empty-frame window). */
+  /** A keyless window: the grand total of the grouped chart rows. Over
+    * [[processData]]'s single partition it plans no exchange and no
+    * join, and over no rows it gives no rows. */
+  private val grand = Window.partitionBy()
+
+  /** Tweet-volume share per topic for the donut (charts.py:88-94): the
+    * exact long sum per topic over the exact long grand total. */
   def countsDonut(processed: DataFrame): DataFrame =
-    Relational.withGlobal(
-        processed.groupBy(col("topic")).agg(sum(col("counts")).as("counts")),
-        sum(col("counts")).as("__total"))
-      .withColumn("percent", col("counts") / col("__total"))
-      .drop("__total")
+    processed.groupBy(col("topic")).agg(sum(col("counts")).as("counts"))
+      .withColumn("percent", col("counts") / sum(col("counts")).over(grand))
 
   /** Tweet volume per period (area chart, charts.py:99-106). */
   def countsPeriod(processed: DataFrame, aggLevel: String): DataFrame =
@@ -176,15 +182,13 @@ object ChartQueries {
     val scaled = round(col("positivity_rate") * 10000, 0).cast("long")
     // count the NON-NULL rates, matching avg()'s null exclusion (and
     // q35's count(e.value)): a null rate must not deflate the mean
-    val rates = processed
+    processed
       .groupBy(col("topic"))
       .agg(round(sum(scaled).cast("double")
         / (count(col("positivity_rate")) * lit(10000.0)), 4)
         .as("positivity_rate"))
-    Relational.withGlobal(rates,
-      round(sum(scaled).cast("double")
-        / (count(col("positivity_rate")) * lit(10000.0)), 4)
-        .as("global_rate"))
+      .withColumn("global_rate", round(sum(scaled).over(grand).cast("double")
+        / (count(col("positivity_rate")).over(grand) * lit(10000.0)), 4))
   }
 
   /** Mean positivity per (period, topic) — line chart (charts.py:160-168).
@@ -219,52 +223,37 @@ object ChartQueries {
     * rounded at 4dp flipped their last digit at sf0.1 when the
     * interpolant landed on a knife-edge). The derived iqr/whisker
     * expressions are the same IEEE op sequence in both engine texts
-    * over those identical inputs. Window partitions are the chart
-    * groups (≤ topics × days) with ≤ HourBuckets rows each — bounded
-    * AFTER the serving aggregation, never corpus-sized.
+    * over those identical inputs.
+    *
+    * One `groupBy(keys)` aggregate: each chart group (≤ topics × days)
+    * collects its non-NULL rates, sorted; q1/median/q3 are the elements
+    * at rank max(⌈p·n⌉, 1), and lo/hi the first and last. NULL rates
+    * are excluded before ranking, matching quantile_disc's non-null
+    * multiset. The grouping keeps NULL keys and groups whose rates are
+    * ALL NULL, exactly as a SQL GROUP BY does; such a group has an
+    * empty array, and `get` reads NULL past its end, so it emits its
+    * row with NULL stats.
     *
     * Convention note: the reference dashboard's Vega-Lite/pandas
     * boxplot uses LINEAR-INTERPOLATION quartiles; this emits the
     * ⌈p·n⌉ discrete convention ([[graft.operators.QuantileKernel
     * .discQuantiles]] pins the same rank arithmetic on histograms) —
     * a deliberate divergence for engine parity, visually identical at
-    * chart precision. NULL rates are excluded before ranking, matching
-    * quantile_disc's non-null multiset (Spark would otherwise rank
-    * NULLs first and shift every ⌈p·n⌉ position); the quartile table
-    * is then LEFT-JOINED back onto the distinct group keys, so a
-    * group whose rates are ALL NULL still emits its row with NULL
-    * stats — exactly what a SQL GROUP BY produces (r6 ADVICE: the
-    * filter alone would silently drop such a group while the oracle
-    * kept it). */
+    * chart precision. */
   def positivityBoxplot(
       processed: DataFrame, byLevel: Option[String] = None,
       interpolated: Boolean = false): DataFrame = {
     if (interpolated) return positivityBoxplotInterp(processed, byLevel)
-    val keyNames = Seq("topic") ++ byLevel
-    val keys = keyNames.map(col)
-    val w = Window.partitionBy(keys: _*).orderBy(col("positivity_rate"))
-    val ranked = processed
-      .filter(col("positivity_rate").isNotNull)
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy(keys: _*)))
-    def disc(p: Double) = min(when(
-      col("__rn") === greatest(ceil(lit(p) * col("__n")), lit(1L)),
-      col("positivity_rate")))
-    val base = ranked
+    val keys = (Seq("topic") ++ byLevel).map(col)
+    val sorted = col("__rates")
+    def at(rank: Column) = get(sorted, (rank - 1).cast("int"))
+    def disc(p: Double) = at(greatest(ceil(lit(p) * size(sorted)), lit(1L)))
+    processed
       .groupBy(keys: _*)
-      .agg(
+      .agg(sort_array(collect_list(col("positivity_rate"))).as("__rates"))
+      .select(keys ++ Seq(
         disc(0.25).as("q1"), disc(0.5).as("median"), disc(0.75).as("q3"),
-        min(col("positivity_rate")).as("lo"),
-        max(col("positivity_rate")).as("hi"))
-    // null-SAFE key equality (<=>): a NULL group key is a real GROUP BY
-    // group and must pick up its quartiles, not a dangling NULL row
-    // (r7 review; the oracle joins IS NOT DISTINCT FROM to match)
-    val allKeys = processed.select(keys: _*).distinct().as("k")
-    val statCols = Seq("q1", "median", "q3", "lo", "hi")
-    allKeys
-      .join(base.as("b"),
-        keyNames.map(k => col(s"k.$k") <=> col(s"b.$k")).reduce(_ && _), "left")
-      .select(keyNames.map(k => col(s"k.$k").as(k)) ++ statCols.map(col): _*)
+        at(lit(1)).as("lo"), at(size(sorted)).as("hi")): _*)
       .withColumn("iqr", col("q3") - col("q1"))
       .withColumn("whisker_lo", greatest(col("lo"), col("q1") - lit(1.5) * col("iqr")))
       .withColumn("whisker_hi", least(col("hi"), col("q3") + lit(1.5) * col("iqr")))
@@ -292,8 +281,8 @@ object ChartQueries {
     * QuantileKernel form — state is the distinct 4dp rate domain,
     * ≤ 10⁴+1 values, not the rows), cumulative window over the
     * histogram only, order statistics as conditional mins. NULL rates
-    * are excluded before ranking; all-NULL groups re-enter via the
-    * null-safe LEFT JOIN exactly like the discrete mode. */
+    * are excluded before ranking; all-NULL groups re-enter via a
+    * null-safe LEFT JOIN from the distinct group keys. */
   private def positivityBoxplotInterp(
       processed: DataFrame, byLevel: Option[String]): DataFrame = {
     val keyNames = Seq("topic") ++ byLevel

@@ -770,11 +770,20 @@ class PlanInvariantsSpec extends SparkSpec {
     assert(charts.size === 16)
     charts.foreach { case (name, df) =>
       assert(df.collect().nonEmpty, name)
-      // BroadcastExchange is allowed: a broadcast of a one-row total or
-      // a join side is no shuffle of the serving relation
+      // each chart is grouping, window and sort over the one partition:
+      // no shuffle, and no join or broadcast (grand totals are keyless
+      // windows, the boxplot one aggregate)
       val p = df.queryExecution.executedPlan.toString
-      Seq("Exchange hashpartitioning", "rangepartitioning", "Exchange SinglePartition")
+      Seq("Exchange hashpartitioning", "rangepartitioning", "Exchange SinglePartition",
+          "Join", "CartesianProduct", "BroadcastExchange")
         .foreach(bad => assert(!p.contains(bad), s"$name plans $bad:\n$p"))
     }
+  }
+
+  test("pipeline: the hourly aggregate is one Aggregate with no join") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    val opt = ServingQueries.pipelineAggregateQ.run(spark, sf001).queryExecution.optimizedPlan
+    assert(opt.collect { case a: Aggregate => a }.size === 1, opt.toString)
+    assert(opt.collect { case j: Join => j }.isEmpty, opt.toString)
   }
 }

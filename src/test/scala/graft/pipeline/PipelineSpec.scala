@@ -18,10 +18,21 @@ class PipelineSpec extends SparkSpec {
     ).toDF("topic", "sentiment", "emotion")
   }
 
-  test("hourly aggregate: positivity with null-safe equality + pivot + join") {
-    val out = HourlyAggregate.aggregate(enrichedFixture)
-      .orderBy("topic_agg").collect()
+  test("hourly aggregate: one per-topic grouping, pinned columns") {
+    import spark.implicits._
+    // a NULL topic must not reach the output: the reference's inner
+    // join on `topic_agg === topic` dropped it
+    val withNullTopic = enrichedFixture
+      .union(Seq[(String, String, String)]((null, "positive", "joy")).toDF())
+    val agg = HourlyAggregate.aggregate(withNullTopic)
+    val labels = KeywordEmotionClassifier.labels
+    assert(agg.columns.toSeq ===
+      Seq("topic_agg", "positivity_rate", "counts", "topic") ++ labels)
+    assert(agg.schema.map(_.dataType.typeName) ===
+      Seq("string", "double", "long", "string") ++ labels.map(_ => "long"))
+    val out = agg.orderBy("topic_agg").collect()
     assert(out.length === 2)
+    assert(out.map(_.getAs[String]("topic")).toSeq === Seq("alpha", "beta"))
     val alpha = out.head
     assert(alpha.getAs[String]("topic_agg") === "alpha")
     // 2 positives / 4 rows, null counted as 0 not null
@@ -29,7 +40,7 @@ class PipelineSpec extends SparkSpec {
     assert(alpha.getAs[Long]("counts") === 4)
     assert(alpha.getAs[Long]("joy") === 2)
     assert(alpha.getAs[Long]("fear") === 1)
-    assert(alpha.getAs[Long]("surprise") === 0) // explicit label, filled 0
+    assert(alpha.getAs[Long]("surprise") === 0) // explicit label, counted 0
     val beta = out(1)
     assert(beta.getAs[Double]("positivity_rate") === 0.0)
     assert(beta.getAs[Long]("sadness") === 2)
