@@ -39,28 +39,9 @@ object Bench {
     // that order, unchanged rows' timings moved (r11: s12/s13 swung
     // 0.56→2.34 s with identical code). Pinned here, consumer rows
     // time pure serve cost and the build bill is attributed by name.
-    val lakeBuilds: Seq[(String, () => Unit)] = Seq(
-      "minhash_sigs" -> (() => { sources.SignatureLake.portableSignatures(spark, sfDir); () }),
-      "minhash_bands" -> (() => { sources.SignatureLake.portableBandKeys(spark, sfDir); () }),
-      "minhash_prod_bands" -> (() => { sources.SignatureLake.productionBandRows(spark, sfDir); () }),
-      "token_counts" -> (() => { sources.SignatureLake.tokenCounts(spark, sfDir); () }),
-      "term_impacts" -> (() => { sources.SignatureLake.termImpacts(spark, sfDir); () }),
-      "term_champions" -> (() => { sources.SignatureLake.termChampions(spark, sfDir); () }),
-      "shingle_index" -> (() => { sources.SignatureLake.shingleIndex(spark, sfDir); () }),
-      "shingle_sets" -> (() => { sources.SignatureLake.shingleSets(spark, sfDir); () }),
-      "simhash_fp" -> (() => { sources.SignatureLake.portableFingerprints(spark, sfDir); () }),
-      "ann_buckets" -> (() => { sources.SignatureLake.portableAnnBuckets(spark, sfDir); () }),
-      "knn_exact" -> (() => { sources.SignatureLake.exactProbeGraph(spark, sfDir); () }),
-      "decontam_bloom" -> (() => { sources.SignatureLake.decontamBloomFilter(spark, sfDir); () }),
-      "ivf_codebook" -> (() => { sources.SignatureLake.trainedIvfCodebook(spark, sfDir); () }),
-      // r17 additions (additions only — existing entries unchanged):
-      // the span-gram index (d27/d30/p04's shared input) and the
-      // m05/m09 shared perceptual-hash relation
-      "span_grams" -> (() => { sources.SignatureLake.spanGrams(spark, sfDir); () }),
-      "phash" -> (() => { sources.SignatureLake.perceptualHashes(spark, sfDir); () }))
-    val lakeTimes = lakeBuilds.map { case (name, build) =>
+    val lakeTimes = sources.SignatureLake.families.map { case (name, build) =>
       val t0 = System.nanoTime()
-      val ok = try { build(); true } catch { case _: Throwable => false }
+      val ok = try { build(spark, sfDir); true } catch { case _: Throwable => false }
       name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
     val lakeJson = lakeTimes.map { case (k, v) => "\"" + k + "\":" + v }

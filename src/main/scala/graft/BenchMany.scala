@@ -25,21 +25,7 @@ object BenchMany {
     val (lakeFirst, queryNames) = names.partition(_ == "lake!")
     if (lakeFirst.nonEmpty) {
       val t0 = System.nanoTime()
-      sources.SignatureLake.portableSignatures(spark, sfDir)
-      sources.SignatureLake.portableBandKeys(spark, sfDir)
-      sources.SignatureLake.productionBandRows(spark, sfDir)
-      sources.SignatureLake.tokenCounts(spark, sfDir)
-      sources.SignatureLake.termImpacts(spark, sfDir)
-      sources.SignatureLake.termChampions(spark, sfDir)
-      sources.SignatureLake.shingleIndex(spark, sfDir)
-      sources.SignatureLake.shingleSets(spark, sfDir)
-      sources.SignatureLake.portableFingerprints(spark, sfDir)
-      sources.SignatureLake.portableAnnBuckets(spark, sfDir)
-      sources.SignatureLake.exactProbeGraph(spark, sfDir)
-      sources.SignatureLake.decontamBloomFilter(spark, sfDir)
-      sources.SignatureLake.trainedIvfCodebook(spark, sfDir)
-      sources.SignatureLake.spanGrams(spark, sfDir)
-      sources.SignatureLake.perceptualHashes(spark, sfDir)
+      sources.SignatureLake.families.foreach { case (_, build) => build(spark, sfDir) }
       println(f"[benchmany] lake builds: ${(System.nanoTime() - t0) / 1e9}%.3f s")
     }
 

@@ -432,7 +432,7 @@ object ChartRegistry {
     * broadcast scalar) must equal the processed row count — exactly
     * one stored row per (topic, hour) — which the oracle predicts as
     * a subquery; without `compact()` the store holds 3× that and the
-    * row goes red. Fresh pid/sf-scoped store per run (bench reps):
+    * row goes red. Fresh scratch store per run (bench reps):
     * the contract is the store CONTENT, rebuilt deterministically.
     * SinkCrashSpec separately proves every crash window self-heals. */
   val compactionServeQ: GraftQuery = GraftQuery(
@@ -441,7 +441,7 @@ object ChartRegistry {
       """SELECT p.*, (SELECT CAST(count(*) AS BIGINT) FROM processed) AS store_rows
         |FROM processed p""".stripMargin)) { (spark, sf) =>
     val raw = aggregates(spark, sf)
-    val sink = freshSink(sf, "c19")
+    val sink = freshSink(spark, sf, "c19")
     sink.append(raw.filter(hour(col("created_at")) % 2 === 0))
     sink.append(raw.filter(hour(col("created_at")) % 2 =!= 0))
     sink.append(replayBatch(raw))
@@ -470,17 +470,20 @@ object ChartRegistry {
       .withColumn("counts", col("counts") + 5)
   }
 
-  /** Fresh pid/sf-scoped compacting store (bench reps rebuild — the
-    * contract is the store CONTENT, rebuilt deterministically). */
-  private[graft] def freshSink(sf: String, tag: String): graft.pipeline.CompactingAggregateSink = {
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_compact_$tag" +
-      s"_p${ProcessHandle.current().pid()}_${sf.replaceAll("[^A-Za-z0-9]+", "_")}"
-    def del(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(del))
-      f.delete(); ()
-    }
-    del(new java.io.File(dir))
-    new graft.pipeline.CompactingAggregateSink(dir)
+  /** A fresh, empty compacting store for row `tag` on `sf` (bench reps
+    * rebuild — the contract is the store CONTENT, rebuilt
+    * deterministically), in the session's warehouse scratch directory
+    * ([[graft.sources.SignatureLake.scratchPath]]). The warehouse must
+    * be on the local file system: the store's two-rename publish is
+    * local-FS by construction. */
+  private[graft] def freshSink(spark: SparkSession, sf: String,
+      tag: String): graft.pipeline.CompactingAggregateSink = {
+    val dir = graft.sources.SignatureLake.scratchPath(spark, sf, s"compact_$tag")
+    graft.sources.SignatureLake.deleteDir(spark, dir)
+    val uri = new org.apache.hadoop.fs.Path(dir).toUri
+    require(uri.getScheme == null || uri.getScheme == "file",
+      s"the compacting store needs a local warehouse, not $dir")
+    new graft.pipeline.CompactingAggregateSink(uri.getPath)
   }
 
   private def serveWithStoreRows(spark: SparkSession,
@@ -511,7 +514,7 @@ object ChartRegistry {
       """SELECT p.*, (SELECT CAST(count(*) AS BIGINT) FROM processed) AS store_rows
         |FROM processed p""".stripMargin)) { (spark, sf) =>
     val raw = aggregates(spark, sf)
-    val sink = freshSink(sf, "c21")
+    val sink = freshSink(spark, sf, "c21")
     sink.append(raw.filter(hour(col("created_at")) % 2 === 0))
     sink.compact(spark) // partial-store compaction
     sink.append(raw.filter(hour(col("created_at")) % 2 =!= 0))
@@ -549,7 +552,7 @@ object ChartRegistry {
          |FROM processed p
          |WHERE p.date_hour >= TIMESTAMP '$RetentionCutoff'""".stripMargin)) { (spark, sf) =>
     val raw = aggregates(spark, sf)
-    val sink = freshSink(sf, "c22")
+    val sink = freshSink(spark, sf, "c22")
     sink.append(raw.filter(hour(col("created_at")) % 2 === 0))
     sink.append(raw.filter(hour(col("created_at")) % 2 =!= 0))
     sink.append(replayBatch(raw))

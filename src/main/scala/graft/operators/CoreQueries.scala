@@ -922,8 +922,8 @@ object CoreQueries {
     * oracle replays the row count per format and expects the parity
     * boolean TRUE — a lossy option (second-precision timestamps,
     * unquoted CSV) flips it red. The per-format loop is bounded by
-    * |Formats| = 2; the exports land in a pid-scoped temp dir,
-    * overwritten per run (idempotent under bench reps). */
+    * |Formats| = 2; the exports land in the row's warehouse scratch
+    * directory, overwritten per run (idempotent under bench reps). */
   val sourceFormats: GraftQuery = GraftQuery(
     "q55_source_formats",
     """SELECT 'csv' AS format, CAST(count(*) AS BIGINT) AS n_rows,
@@ -934,8 +934,7 @@ object CoreQueries {
     (spark, sf) =>
       import graft.sources.MultiFormat
       val base = Tables.events(spark, sf)
-      val dir = s"${System.getProperty("java.io.tmpdir")}/graft_fmt" +
-        s"_p${ProcessHandle.current().pid()}_${sf.replaceAll("[^A-Za-z0-9]+", "_")}"
+      val dir = graft.sources.SignatureLake.scratchPath(spark, sf, "fmt")
       val rows = MultiFormat.Formats.map { fmt =>
         MultiFormat.write(base, s"$dir/$fmt", fmt)
         val back = MultiFormat.read(spark, s"$dir/$fmt", fmt, base.schema)
@@ -967,7 +966,8 @@ object CoreQueries {
     * generations (at 100 TB the schema lives in a catalog and the
     * merged read pays nothing extra); the query itself is one
     * map-combined aggregation to ≤|types|+1 rows. The generations
-    * land in a pid-scoped temp lake, overwritten per run. */
+    * land in the row's warehouse scratch directory, overwritten per
+    * run. */
   val schemaEvolution: GraftQuery = GraftQuery(
     "q62_schema_evolution",
     """WITH m AS (
@@ -981,8 +981,7 @@ object CoreQueries {
       |       min(value) AS min_value, max(value) AS max_value
       |FROM m GROUP BY 1""".stripMargin) { (spark, sf) =>
     val ev = Tables.events(spark, sf)
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_evo" +
-      s"_p${ProcessHandle.current().pid()}_${sf.replaceAll("[^A-Za-z0-9]+", "_")}"
+    val dir = graft.sources.SignatureLake.scratchPath(spark, sf, "evo")
     ev.filter(col("event_id") % 2 === 0)
       .select("event_id", "user_id", "value")
       .write.mode("overwrite").parquet(s"$dir/gen1")

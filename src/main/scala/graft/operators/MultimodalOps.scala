@@ -410,20 +410,14 @@ object MultimodalOps {
        |SELECT l.doc_id, l.cluster_id, CAST(s.cluster_size AS BIGINT) AS cluster_size
        |FROM lab l JOIN sz s USING (cluster_id)""".stripMargin) { (spark, sf) =>
     // shared phash lake family (r17) — see m05; the CC propagation
-    // below is unchanged (its labels artifact is d07's kernel). The
-    // labels parquet path is pinned per sf (the d07 stable-path rule:
-    // the auto plan-keyed tag would embed the pid-named lake table and
-    // leak one tmp dir per JVM).
-    val sfTag = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(sf).toLong & 0xffffffffL)
-    val ccDir = s"${System.getProperty("java.io.tmpdir")}/graft_m09_labels_$sfTag"
+    // below is d07's kernel
     val ph = graft.sources.SignatureLake.perceptualHashes(spark, sf)
     val pairs = DedupOps.simhashPairsMulti(
       ph.withColumnRenamed("phash", "sh0"), Seq("sh0"), PhashMaxHamming)
     val cc = DedupOps.connectedComponents(
       ph.select(col("doc_id")),
       pairs.select(col("doc_a"), col("doc_b")),
-      outDir = Some(ccDir))
+      outDir = Some(graft.sources.SignatureLake.scratchPath(spark, sf, "m09_labels")))
       .withColumnRenamed("label", "cluster_id")
     val sizes = cc.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"))

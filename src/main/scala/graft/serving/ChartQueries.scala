@@ -140,16 +140,23 @@ object ChartQueries {
         .filter(col(emotions.head).isNotNull),
       Nil)
 
-  /** A keyless window: the grand total of the grouped chart rows. Over
-    * [[processData]]'s single partition it plans no exchange and no
-    * join, and over no rows it gives no rows. */
-  private val grand = Window.partitionBy()
+  /** `grouped` (the grouped chart rows) with `totals`, its grand
+    * totals, as extra columns: one keyless aggregate collects the rows
+    * beside the totals and `inline` restores them. Over
+    * [[processData]]'s single partition it plans no exchange, no join
+    * and no keyless window (which Spark warns about on every plan),
+    * and over no rows it gives no rows. */
+  private def withGrand(grouped: DataFrame, totals: Column*): DataFrame =
+    grouped.agg(collect_list(struct(grouped.columns.toIndexedSeq.map(col): _*)).as("__rows"),
+        totals: _*)
+      .select(col("*"), inline(col("__rows"))).drop("__rows")
 
   /** Tweet-volume share per topic for the donut (charts.py:88-94): the
     * exact long sum per topic over the exact long grand total. */
   def countsDonut(processed: DataFrame): DataFrame =
-    processed.groupBy(col("topic")).agg(sum(col("counts")).as("counts"))
-      .withColumn("percent", col("counts") / sum(col("counts")).over(grand))
+    withGrand(processed.groupBy(col("topic")).agg(sum(col("counts")).as("counts")),
+        sum(col("counts")).as("__total"))
+      .select(col("topic"), col("counts"), (col("counts") / col("__total")).as("percent"))
 
   /** Tweet volume per period (area chart, charts.py:99-106). */
   def countsPeriod(processed: DataFrame, aggLevel: String): DataFrame =
@@ -182,13 +189,14 @@ object ChartQueries {
     val scaled = round(col("positivity_rate") * 10000, 0).cast("long")
     // count the NON-NULL rates, matching avg()'s null exclusion (and
     // q35's count(e.value)): a null rate must not deflate the mean
-    processed
-      .groupBy(col("topic"))
-      .agg(round(sum(scaled).cast("double")
-        / (count(col("positivity_rate")) * lit(10000.0)), 4)
-        .as("positivity_rate"))
-      .withColumn("global_rate", round(sum(scaled).over(grand).cast("double")
-        / (count(col("positivity_rate")).over(grand) * lit(10000.0)), 4))
+    withGrand(processed
+        .groupBy(col("topic"))
+        .agg(round(sum(scaled).cast("double")
+          / (count(col("positivity_rate")) * lit(10000.0)), 4)
+          .as("positivity_rate")),
+      sum(scaled).as("__sum"), count(col("positivity_rate")).as("__n"))
+      .select(col("topic"), col("positivity_rate"), round(col("__sum").cast("double")
+        / (col("__n") * lit(10000.0)), 4).as("global_rate"))
   }
 
   /** Mean positivity per (period, topic) — line chart (charts.py:160-168).

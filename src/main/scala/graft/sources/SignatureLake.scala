@@ -150,7 +150,7 @@ object SignatureLake {
   private def sanitize(s: String): String =
     s.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+|_+$", "")
 
-  private def tableName(spark: SparkSession, sfDir: String, family: String): String =
+  private[graft] def tableName(spark: SparkSession, sfDir: String, family: String): String =
     s"graft_lake_${family}_${sanitize(sfDir)}_p${ProcessHandle.current().pid()}" +
       s"_s${Integer.toHexString(System.identityHashCode(spark))}"
 
@@ -164,11 +164,25 @@ object SignatureLake {
     * them harmless). */
   private def preclean(spark: SparkSession, table: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        org.apache.spark.sql.catalyst.TableIdentifier(table)))
+    deleteDir(spark, spark.sessionState.catalog.defaultTablePath(
+      org.apache.spark.sql.catalyst.TableIdentifier(table)).toString)
+  }
+
+  /** Recursively delete `path` (any Hadoop file system) if it exists. */
+  def deleteDir(spark: SparkSession, path: String): Unit = {
+    val loc = new org.apache.hadoop.fs.Path(path)
     val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(loc)) fs.delete(loc, true)
+  }
+
+  /** The warehouse directory for one row's intermediate artifacts of
+    * `kind` on `sfDir`: named like a lake table, so it is unique per
+    * process and session, and the orphan sweep reclaims it once its
+    * process is dead. Callers overwrite it per run (bench reps); it is
+    * not registered in the catalog. */
+  def scratchPath(spark: SparkSession, sfDir: String, kind: String): String = {
+    sweepOrphans(spark)
+    s"${spark.sessionState.conf.warehousePath}/${tableName(spark, sfDir, "scratch_" + kind)}"
   }
 
   /** Write `df` as a MANAGED bucketed+sorted parquet table — the lake
@@ -200,31 +214,36 @@ object SignatureLake {
       .saveAsTable(table)
   }
 
-  /** Once per JVM, garbage-collect lake directories left by DEAD
-    * processes (each forked Verify/Bench/test JVM writes pid-named
-    * tables and cannot drop them after exit). Best-effort: a live
-    * pid's tables are never touched, and any IO failure is ignored —
-    * this is warehouse hygiene, not correctness. */
+  /** Once per JVM, garbage-collect lake directories (tables and
+    * scratch) left by DEAD processes (each forked Verify/Bench/test JVM
+    * writes pid-named directories and cannot drop them after exit).
+    * Best-effort: a live pid's directories are never touched, and an
+    * IO failure is logged, not thrown — this is warehouse hygiene, not
+    * correctness. */
   private val swept = new java.util.concurrent.atomic.AtomicBoolean(false)
   private def sweepOrphans(spark: SparkSession): Unit =
-    if (swept.compareAndSet(false, true)) {
-      try {
-        val wh = new org.apache.hadoop.fs.Path(spark.sessionState.conf.warehousePath)
-        val fs = wh.getFileSystem(spark.sessionState.newHadoopConf())
-        val self = ProcessHandle.current().pid()
-        val pidRe = "_p(\\d+)_s".r
-        if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("graft_lake_")) {
-            pidRe.findFirstMatchIn(n).foreach { m =>
-              val pid = m.group(1).toLong
-              val dead = pid != self &&
-                !ProcessHandle.of(pid).map[java.lang.Boolean](_.isAlive).orElse(false)
-              if (dead) fs.delete(st.getPath, true)
-            }
+    if (swept.compareAndSet(false, true)) sweepDead(spark)
+
+  private[sources] def sweepDead(spark: SparkSession): Unit =
+    try {
+      val wh = new org.apache.hadoop.fs.Path(spark.sessionState.conf.warehousePath)
+      val fs = wh.getFileSystem(spark.sessionState.newHadoopConf())
+      val self = ProcessHandle.current().pid()
+      val pidRe = "_p(\\d+)_s".r
+      if (fs.exists(wh)) fs.listStatus(wh).foreach { st =>
+        val n = st.getPath.getName
+        if (n.startsWith("graft_lake_")) {
+          pidRe.findFirstMatchIn(n).foreach { m =>
+            val pid = m.group(1).toLong
+            val dead = pid != self &&
+              !ProcessHandle.of(pid).map[java.lang.Boolean](_.isAlive).orElse(false)
+            if (dead) fs.delete(st.getPath, true)
           }
         }
-      } catch { case _: Exception => () }
+      }
+    } catch { case e: Exception =>
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"lake orphan sweep failed: ${e.getClass.getName}: ${e.getMessage}")
     }
 
   private def get(spark: SparkSession, sfDir: String, family: String,
@@ -998,6 +1017,25 @@ object SignatureLake {
       t => writeFamily(DedupOps.semDedupAssign(DedupOps.semDedupEmbed(delta), cb),
         t, Seq("cell"), SaveMode.Append))
   }
+
+  /** The shared lake families, by name, in build order: Bench times
+    * each build under its name, and BenchMany pre-builds them all. */
+  val families: Seq[(String, (SparkSession, String) => Any)] = Seq(
+    "minhash_sigs" -> portableSignatures,
+    "minhash_bands" -> portableBandKeys,
+    "minhash_prod_bands" -> productionBandRows,
+    "token_counts" -> tokenCounts,
+    "term_impacts" -> termImpacts,
+    "term_champions" -> termChampions,
+    "shingle_index" -> shingleIndex,
+    "shingle_sets" -> shingleSets,
+    "simhash_fp" -> portableFingerprints,
+    "ann_buckets" -> portableAnnBuckets,
+    "knn_exact" -> exactProbeGraph,
+    "decontam_bloom" -> decontamBloomFilter,
+    "ivf_codebook" -> trainedIvfCodebook,
+    "span_grams" -> spanGrams,
+    "phash" -> perceptualHashes)
 
   /** Drop (and delete — managed tables) every lake table owned by
     * `spark`. */

@@ -127,12 +127,12 @@ object StreamReplay {
   private def thirds[T](xs: Seq[T]): Seq[Seq[T]] =
     xs.grouped(math.max(1, (xs.size + 2) / 3)).toSeq
 
-  /** A throwaway lake table name for one row run: pid- and
-    * session-scoped like the lake's own tables, so concurrent JVMs and
-    * bench reps never share one. */
-  private def scratchTable(kind: String, sf: String): String =
-    s"graft_lake_${kind}_${sf.replaceAll("[^A-Za-z0-9]+", "_")}" +
-      s"_p${ProcessHandle.current().pid()}_s${nameCounter.incrementAndGet()}"
+  /** A throwaway lake table name for one row run: the lake's own pid-
+    * and session-scoped name plus a per-run counter, so concurrent JVMs
+    * and bench reps never share one, and the lake's orphan sweep
+    * reclaims it once its process is dead. */
+  private def scratchTable(spark: SparkSession, sf: String, kind: String): String =
+    s"${graft.sources.SignatureLake.tableName(spark, sf, kind)}_${nameCounter.incrementAndGet()}"
 
   /** Run `body` with `confs` set on the session, then put every key
     * back as it was — its earlier explicit value, or unset if it had
@@ -739,7 +739,7 @@ object StreamReplay {
     // driver-collected delta fixture, three chronological micro-batches
     val delta = emb.filter(col("vec_id") % 10 === 0)
       .as[EmbRow].collect().sortBy(_.vec_id).toSeq
-    val table = scratchTable("st12append", sf)
+    val table = scratchTable(spark, sf, "st12append")
     spark.sql(s"DROP TABLE IF EXISTS $table")
     SignatureLake.appendEmbeddingDelta(spark, table,
       emb.filter(col("vec_id") % 10 =!= 0)) // generation 0: the base build
@@ -825,7 +825,7 @@ object StreamReplay {
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
     val deleted = emb.filter(col("vec_id") % TombMod === TombRem)
       .select(col("vec_id")).as[Long].collect().sorted.toSeq
-    val table = scratchTable("st13tomb", sf)
+    val table = scratchTable(spark, sf, "st13tomb")
     val tomb = s"${table}_tomb"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS $tomb")
@@ -941,11 +941,12 @@ object StreamReplay {
     val isLate = (bucket % ChartRegistry.LateHourMod === 3) &&
       (col("doc_id") % ChartRegistry.LateDocMod === 0)
     val initial = docs.filter(!isLate)
-    val sink = ChartRegistry.freshSink(sf, "st14")
+    val sink = ChartRegistry.freshSink(spark, sf, "st14")
     sink.append(ChartRegistry.aggregatesPlanFrom(initial))
     val late = docs.filter(isLate).select("doc_id", "source", "text")
       .as[DocRow].collect().sortBy(_.doc_id).toSeq
-    val staging = Files.createTempDirectory("graft_st14_staging")
+    val staging = graft.sources.SignatureLake.scratchPath(spark, sf, "st14_staging")
+    graft.sources.SignatureLake.deleteDir(spark, staging)
     try {
       replay(spark, "graft_st14", thirds(late))(_.toDF("doc_id", "source", "text")
         .writeStream
@@ -964,7 +965,7 @@ object StreamReplay {
         .drop("__ch")
         .crossJoin(broadcast(store.agg(count(lit(1)).as("store_rows"))))
       localize(spark, out.collect(), out.schema)
-    } finally rmScratch(staging)
+    } finally graft.sources.SignatureLake.deleteDir(spark, staging)
   }
 
   /** st15 — the LEXICAL index joins the stream-maintained-index
@@ -1003,7 +1004,7 @@ object StreamReplay {
     import graft.sources.SignatureLake
     val docs = Tables.documents(spark, sf)
     val isDelta = col("doc_id") % graft.operators.DedupOps.DocDeltaMod === graft.operators.DedupOps.DocDeltaRem
-    val table = scratchTable("st15terms", sf)
+    val table = scratchTable(spark, sf, "st15terms")
     spark.sql(s"DROP TABLE IF EXISTS $table")
     SignatureLake.appendTermPostings(spark, table, docs.filter(!isDelta))
     val delta = docs.filter(isDelta).select("doc_id", "source", "text")
@@ -1060,7 +1061,7 @@ object StreamReplay {
     import graft.operators.MultimodalOps
     import graft.sources.SignatureLake
     val isDelta = col("doc_id") % graft.operators.DedupOps.DocDeltaMod === graft.operators.DedupOps.DocDeltaRem
-    val table = scratchTable("st16chunks", sf)
+    val table = scratchTable(spark, sf, "st16chunks")
     spark.sql(s"DROP TABLE IF EXISTS $table")
     SignatureLake.appendChunkDigests(spark, table,
       MultimodalOps.asCdcPayloads(spark, sf).filter(!isDelta))
@@ -1125,7 +1126,7 @@ object StreamReplay {
     val docs = Tables.documents(spark, sf)
     val deleted = docs.filter(col("doc_id") % TombMod === TombRem)
       .select(col("doc_id")).as[Long].collect().sorted.toSeq
-    val table = scratchTable("st17terms", sf)
+    val table = scratchTable(spark, sf, "st17terms")
     val tomb = s"${table}_tomb"
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"DROP TABLE IF EXISTS $tomb")
@@ -1225,7 +1226,7 @@ object StreamReplay {
     import graft.sources.SignatureLake
     val docs = Tables.documents(spark, sf)
     val isDelta = col("doc_id") % graft.operators.DedupOps.DocDeltaMod === graft.operators.DedupOps.DocDeltaRem
-    val table = scratchTable("st18terms", sf)
+    val table = scratchTable(spark, sf, "st18terms")
     val tomb = s"${table}_tomb"
     val g2 = s"${table}_g2"
     val owned = Seq(table, s"${table}_si", s"${table}_tier", tomb,

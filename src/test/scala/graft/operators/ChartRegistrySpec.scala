@@ -19,14 +19,7 @@ class ChartRegistrySpec extends SparkSpec {
 
   test("c19 non-vacuity: injected re-appends inflate the raw store 3x; compact collapses to one row per key") {
     val raw = ChartRegistry.aggregates(spark, sf001)
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_compact_spec" +
-      s"_p${ProcessHandle.current().pid()}"
-    def del(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(del))
-      f.delete(); ()
-    }
-    del(new java.io.File(dir))
-    val sink = new graft.pipeline.CompactingAggregateSink(dir)
+    val sink = ChartRegistry.freshSink(spark, sf001, "spec")
     sink.append(raw)
     sink.append(raw
       .withColumn("created_at", expr("timestampadd(MINUTE, 20, created_at)"))
@@ -48,7 +41,8 @@ class ChartRegistrySpec extends SparkSpec {
     val servedPost = graft.serving.ChartQueries
       .processData(sink.readBack(spark)).collect().toSet
     assert(servedPost === servedPre, "compact-then-serve must equal serve-raw")
-    del(new java.io.File(dir))
+    graft.sources.SignatureLake.deleteDir(spark,
+      graft.sources.SignatureLake.scratchPath(spark, sf001, "compact_spec"))
   }
 
   test("interpolated boxplot pins the pandas/Vega type-7 convention; discrete stays the default") {

@@ -771,12 +771,18 @@ class PlanInvariantsSpec extends SparkSpec {
     charts.foreach { case (name, df) =>
       assert(df.collect().nonEmpty, name)
       // each chart is grouping, window and sort over the one partition:
-      // no shuffle, and no join or broadcast (grand totals are keyless
-      // windows, the boxplot one aggregate)
+      // no shuffle, and no join or broadcast (grand totals are one
+      // keyless aggregate, the boxplot one aggregate)
       val p = df.queryExecution.executedPlan.toString
       Seq("Exchange hashpartitioning", "rangepartitioning", "Exchange SinglePartition",
           "Join", "CartesianProduct", "BroadcastExchange")
         .foreach(bad => assert(!p.contains(bad), s"$name plans $bad:\n$p"))
+      // nor a keyless window, which Spark warns about on every plan
+      val keyless = df.queryExecution.optimizedPlan.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window
+          if w.partitionSpec.isEmpty => w
+      }
+      assert(keyless.isEmpty, s"$name plans a Window with no partition spec:\n$keyless")
     }
   }
 

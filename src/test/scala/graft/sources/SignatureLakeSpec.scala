@@ -477,4 +477,49 @@ class SignatureLakeSpec extends SparkSpec {
     assert(bc.exceptAll(sh).isEmpty && sh.exceptAll(bc).isEmpty,
       "both mask plans must produce identical rows")
   }
+
+  private def exists(path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+  }
+
+  test("scratch path: under the session warehouse, named with this pid and session") {
+    val p = SignatureLake.scratchPath(spark, sf001, "spec")
+    assert(p.startsWith(spark.sessionState.conf.warehousePath + "/"), p)
+    val name = new org.apache.hadoop.fs.Path(p).getName
+    assert(name.startsWith("graft_lake_scratch_spec_"), name)
+    assert(name.contains(s"_p${ProcessHandle.current().pid()}_s"), name)
+    assert(p === SignatureLake.scratchPath(spark, sf001, "spec"),
+      "one (session, sf, kind) names one directory")
+  }
+
+  test("orphan sweep deletes a dead pid's scratch and keeps a live pid's") {
+    val wh = spark.sessionState.conf.warehousePath
+    // far above Linux's pid_max (2^22), so no process can hold it
+    val dead = s"$wh/graft_lake_scratch_spec_x_p999999999_s1"
+    val live = s"$wh/graft_lake_scratch_spec_x_p${ProcessHandle.current().pid()}_s1"
+    Seq(dead, live).foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(p)
+    }
+    try {
+      SignatureLake.sweepDead(spark)
+      assert(!exists(dead), "a dead process's scratch must be swept")
+      assert(exists(live), "a live process's scratch must be kept")
+    } finally Seq(dead, live).foreach(SignatureLake.deleteDir(spark, _))
+  }
+
+  test("q62 and d07 write their scratch under the warehouse, none under java.io.tmpdir") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def tmpGraft(): Set[String] =
+      Option(tmp.list()).fold(Set.empty[String])(_.filter(_.startsWith("graft_")).toSet)
+    val before = tmpGraft()
+    graft.operators.CoreQueries.schemaEvolution.run(spark, sf001).collect()
+    DedupOps.clustersQ.run(spark, sf001).collect()
+    assert(exists(SignatureLake.scratchPath(spark, sf001, "evo") + "/gen1"))
+    assert(exists(SignatureLake.scratchPath(spark, sf001, "d07_labels") + "/_SUCCESS"))
+    assert(exists(SignatureLake.scratchPath(spark, sf001, "d07_pairs")))
+    val added = tmpGraft() -- before
+    assert(added.isEmpty, s"new java.io.tmpdir entries: $added")
+  }
 }

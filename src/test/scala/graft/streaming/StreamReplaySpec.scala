@@ -117,7 +117,7 @@ class StreamReplaySpec extends SparkSpec {
     val isLate = (bucket % ChartRegistry.LateHourMod === 3) &&
       (col("doc_id") % ChartRegistry.LateDocMod === 0)
     val initial = docs.filter(!isLate)
-    val sink = ChartRegistry.freshSink(sf001, "st14retry")
+    val sink = ChartRegistry.freshSink(spark, sf001, "st14retry")
     sink.append(ChartRegistry.aggregatesPlanFrom(initial))
     val stagingRoot = java.nio.file.Files.createTempDirectory("graft_st14_retry")
     try {
@@ -149,7 +149,7 @@ class StreamReplaySpec extends SparkSpec {
     val isLate = (bucket % ChartRegistry.LateHourMod === 3) &&
       (col("doc_id") % ChartRegistry.LateDocMod === 0)
     val initial = docs.filter(!isLate)
-    val sink = ChartRegistry.freshSink(sf001, "st14restart")
+    val sink = ChartRegistry.freshSink(spark, sf001, "st14restart")
     sink.append(ChartRegistry.aggregatesPlanFrom(initial))
     val stagingRoot = java.nio.file.Files.createTempDirectory("graft_st14_restart")
     val ckpt = java.nio.file.Files.createTempDirectory("graft_st14_restart_ckpt")
