@@ -8,9 +8,14 @@ import org.apache.spark.sql.SparkSession
   * Each query is forced through the `noop` sink so the full projection
   * is computed and written (a bare `.count()` would let Catalyst prune
   * every non-key column and flatter the numbers). A warmup pass runs
-  * every query once first: JIT, codegen caches, and parquet footers are
-  * realities of a long-lived cluster session, not of the first 30 s of
-  * a fresh JVM.
+  * every query once first: JIT, class loading, file listings and
+  * parquet footers are realities of a long-lived cluster session, not
+  * of the first 30 s of a fresh JVM. Generated classes last only while
+  * they fit the codegen cache, an LRU of
+  * [[GraftSession.CodegenCacheEntries]] entries: a row's classes
+  * survive from the warm-up to its timed reps only when the rows warmed
+  * after it compiled fewer than that. A row's reps run back to back, so
+  * its later reps reuse the classes its first one compiled.
   */
 object Bench {
   def main(args: Array[String]): Unit = {

@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Dev tool: time SEVERAL registry queries/stages in one JVM —
   * `runMain graft.BenchMany <name,name,...> [reps] [sfDir]` — so an
   * optimization pass can compare a dozen rows without paying sbt+JVM
   * startup per row (BenchOne's loop, lifted over a name list). Prints
-  * per-name min/all times; same noop-sink methodology as Bench. A
+  * per-name min/all times and each rep's Janino compiles (BenchOne's
+  * `compiles=`); same noop-sink methodology as Bench. A
   * leading `lake!` token pre-materializes the shared lake families
   * (untimed) so serve rows are measured in the same regime as Bench.
   */
@@ -31,12 +34,14 @@ object BenchMany {
 
     queryNames.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query '$name'"))
-      val times = (1 to reps).map { _ =>
+      val (times, compiles) = (1 to reps).map { _ =>
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"[benchmany] $name min=${times.min}%.3f s all=${times.map(t => f"$t%.2f").mkString(",")}")
+        ((System.nanoTime() - t0) / 1e9, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+      }.unzip
+      println(f"[benchmany] $name min=${times.min}%.3f s all=${times.map(t => f"$t%.2f").mkString(",")}" +
+        s" compiles=${compiles.mkString(",")}")
     }
     spark.stop()
   }

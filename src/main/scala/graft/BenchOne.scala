@@ -1,11 +1,14 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 
 /** Dev tool: time one registry query (or a named sub-stage) k times at a
   * given SF — `runMain graft.BenchOne <name> [reps] [sfDir]`. Stages let
   * the expensive operators be attributed (signature computation vs
-  * candidate join vs verification) without touching Bench. */
+  * candidate join vs verification) without touching Bench. Each rep
+  * also prints `compiles=<n>`, the classes Janino compiled during it:
+  * a repeated rep that compiles anything is missing the codegen cache. */
 object BenchOne {
   private def embOf(s: org.apache.spark.sql.SparkSession, sf: String): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -60,11 +63,13 @@ object BenchOne {
 
     val doCount = sys.env.get("SPARK_GRAFT_COUNT").contains("1")
     (1 to reps).foreach { i =>
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val extra =
         if (doCount) s" rows=${fn(spark, sfDir).count()}"
         else { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); "" }
-      println(f"[benchone] $name rep $i: ${(System.nanoTime() - t0) / 1e9}%.3f s$extra")
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      println(f"[benchone] $name rep $i: ${(System.nanoTime() - t0) / 1e9}%.3f s compiles=$compiles$extra")
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The reference's hourly aggregation (SURVEY.md §2.5 A1-A3, §2.4 J1,
@@ -18,21 +18,19 @@ import org.apache.spark.sql.functions._
   *  - null-safe equality (`<=>`) on the sentiment indicator;
   *  - the explicit label list gives a static output schema with no
   *    distinct-values job.
+  *
+  * The reference also stamps each row with the processing time
+  * (functions.py:104). Here the aggregate carries no stamp:
+  * HourlyScheduler.runOnce appends the start of the event-hour it
+  * closes, as `created_at`, on the driver after the collect.
   */
 object HourlyAggregate {
 
-  /** @param enriched rows with at least (topic, sentiment, emotion)
-    * @param stamp appended as `created_at` when given. The reference
-    *        stamps the processing time (functions.py:104);
-    *        HourlyScheduler.runOnce passes the start of the event-hour
-    *        it closes instead, so the serving layer buckets each
-    *        aggregate by its event-hour and a re-run of that hour
-    *        carries the same stamp. Omitted for the oracle runs. */
+  /** @param enriched rows with at least (topic, sentiment, emotion) */
   def aggregate(
       enriched: DataFrame,
-      emotionLabels: Seq[String] = KeywordEmotionClassifier.labels,
-      stamp: Option[Column] = None): DataFrame = {
-    val agg = enriched
+      emotionLabels: Seq[String] = KeywordEmotionClassifier.labels): DataFrame =
+    enriched
       .filter(col("topic").isNotNull)
       .groupBy(col("topic"))
       .agg(
@@ -41,6 +39,4 @@ object HourlyAggregate {
           emotionLabels.map(l => count(when(col("emotion") === l, 1)).as(l))): _*)
       .select((Seq(col("topic").as("topic_agg"), col("positivity_rate"),
         col("counts"), col("topic")) ++ emotionLabels.map(col)): _*)
-    stamp.fold(agg)(agg.withColumn("created_at", _))
-  }
 }

@@ -1,10 +1,13 @@
 package graft.pipeline
 
-import java.time.LocalDateTime
+import java.sql.Timestamp
+import java.time.{LocalDateTime, ZoneId}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
+import graft.functions.Relational
 import graft.streaming.{HourlyClock, TweetIngest}
 
 /** The hourly batch driver — replaces the reference's wall-clock sleep
@@ -47,15 +50,17 @@ final class HourlyScheduler(
     * no Observation listener is left registered when the sink throws
     * (Spark offers no public unregister for an un-fired Observation).
     *
+    * The stamp is appended to the collected rows on the driver, as the
+    * last column. In the plan it would be folded to a literal that
+    * whole-stage codegen inlines, so every hour would compile new
+    * classes; without it, every hour runs the same generated code.
+    *
     * @return number of aggregate rows appended (0 = empty partition,
     *         and nothing is appended) */
   def runOnce(now: LocalDateTime): Long = {
     val (date, hour) = HourlyClock.previousHour(now)
-    // the event-hour's start, parsed in the session time zone (the
-    // zone the lake's date/hour partitions are cut in)
     val agg = HourlyAggregate.aggregate(
-      enrich(TweetIngest.readHour(spark, lakeRoot, date, hour)),
-      stamp = Some(to_timestamp(lit(s"$date $hour:00:00"))))
+      enrich(TweetIngest.readHour(spark, lakeRoot, date, hour)))
     // bounded-grain contract, ENFORCED (the replaceHours rule — no
     // implicit driver materialization): collect through a limit one
     // past the bound, so a contract violation costs one extra row,
@@ -68,8 +73,15 @@ final class HourlyScheduler(
         s"rows — the aggregate grain is per-topic, so this means " +
         s"either a grain regression in HourlyAggregate or a topic " +
         s"cardinality this deployment must raise maxDriverRows for")
-    if (collected.nonEmpty)
-      sink.append(graft.functions.Relational.localize(spark, collected, agg.schema))
+    if (collected.nonEmpty) {
+      // the event-hour's start, read in the session time zone (the
+      // zone the lake's date/hour partitions are cut in)
+      val stamp = Timestamp.from(LocalDateTime.parse(s"${date}T$hour:00:00")
+        .atZone(ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))).toInstant)
+      sink.append(Relational.localize(spark,
+        collected.map(r => Row.fromSeq(r.toSeq :+ stamp)),
+        agg.schema.add("created_at", TimestampType)))
+    }
     collected.length.toLong
   }
 

@@ -3,6 +3,7 @@ package graft.pipeline
 import java.nio.file.Files
 import java.time.LocalDateTime
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -93,6 +94,32 @@ class EndToEndSpec extends SparkSpec {
     assert(ChartQueries.latestInputs(processed).count() === 2)
     assert(ChartQueries.emotionDonut(processed)
       .agg(sum("counts")).collect().head.getLong(0) === 5)
+  }
+
+  test("a steady-state cycle compiles no generated class") {
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val lake = Files.createTempDirectory("e2e_lake_c").toString
+    val ckpt = Files.createTempDirectory("e2e_ckpt_c").toString
+    val source = MemoryStream[KafkaMsg]
+    source.addData(hour10 ++ Seq(
+      msg(11, "alpha", "2022-03-01T11:05:00Z", "fast and big again"),
+      msg(12, "beta", "2022-03-01T11:35:00Z", "small and slow"),
+      msg(13, "beta", "2022-03-01T11:50:00Z", "value words")): _*)
+    val q = TweetIngest.startLake(TweetIngest.parse(source.toDF()), lake, ckpt)
+    q.processAllAvailable(); q.stop()
+
+    val sink = new ParquetAggregateSink(
+      Files.createTempDirectory("e2e_agg_c").toString + "/agg")
+    val sched = new HourlyScheduler(spark, lake, sink)
+    assert(sched.runOnce(LocalDateTime.of(2022, 3, 1, 11, 30)) === 2)
+    // the next hour runs the same plans over another partition: nothing
+    // of the hour (its partition, its stamp) may reach generated code,
+    // so every class comes from Spark's codegen cache
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(sched.runOnce(LocalDateTime.of(2022, 3, 1, 12, 30)) === 2)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled === 0, s"the second hour's cycle compiled $compiled classes")
   }
 
   test("runOnce enforces the bounded-grain contract with a diagnosis, not an OOM") {

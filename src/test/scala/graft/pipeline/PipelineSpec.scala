@@ -1,6 +1,8 @@
 package graft.pipeline
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
 import graft.SparkSpec
 
@@ -46,10 +48,26 @@ class PipelineSpec extends SparkSpec {
     assert(beta.getAs[Long]("sadness") === 2)
   }
 
-  test("aggregate with an explicit stamp appends it as created_at") {
-    val out = HourlyAggregate.aggregate(enrichedFixture,
-      stamp = Some(to_timestamp(lit("2022-03-01 10:00:00"))))
-    assert(out.columns.contains("created_at"))
+  test("runOnce appends the event-hour stamp as created_at, the last column") {
+    import spark.implicits._
+    // a one-hour lake, cut into the date/hour partitions readHour reads
+    val lake = java.nio.file.Files.createTempDirectory("pipeline_lake").toString + "/lake"
+    Seq(("a1", "spark is fast", "alpha"), ("b1", "slow and small", "beta"))
+      .toDF("key", "text", "topic")
+      .withColumn("created_at", to_timestamp(lit("2022-03-01 10:20:00")))
+      .withColumn("date", lit("2022-03-01")).withColumn("hour", lit("10"))
+      .write.partitionBy("date", "hour").parquet(lake)
+    var appended: Option[DataFrame] = None
+    val capture = new AggregateSink {
+      override def append(df: DataFrame): Unit = appended = Some(df)
+      override def readBack(s: SparkSession): DataFrame = appended.get
+    }
+    val sched = new HourlyScheduler(spark, lake, capture)
+    assert(sched.runOnce(java.time.LocalDateTime.of(2022, 3, 1, 11, 30)) === 2)
+    val out = appended.get
+    assert(out.columns.toSeq === Seq("topic_agg", "positivity_rate", "counts", "topic") ++
+      KeywordEmotionClassifier.labels :+ "created_at")
+    assert(out.schema("created_at").dataType === TimestampType)
     val stamps = out.select("created_at").distinct().collect()
     // parsed in the session time zone (UTC in every graft session)
     assert(stamps.map(_.getTimestamp(0).toInstant.toString).toSeq ===

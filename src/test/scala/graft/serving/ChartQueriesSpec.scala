@@ -2,6 +2,7 @@ package graft.serving
 
 import java.sql.Timestamp
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
@@ -31,6 +32,39 @@ class ChartQueriesSpec extends SparkSpec {
     Row.fromSeq(Seq(topic, rate, 1L,
       Timestamp.from(java.time.Instant.parse(stamp.replace(' ', 'T') + "Z"))) ++
       ChartQueries.emotions.map(_ => 0L))
+
+  /** A store of one row per topic and hour, rates and counts varying. */
+  private def snapshot(topics: Seq[String], hours: Seq[String]): DataFrame =
+    aggregates(for ((t, i) <- topics.zipWithIndex; (h, j) <- hours.zipWithIndex) yield
+      Row.fromSeq(Seq(t, ((i + j) % 5) / 4.0, 10L + i + j,
+        Timestamp.from(java.time.Instant.parse(h.replace(' ', 'T') + "Z"))) ++
+        ChartQueries.emotions.indices.map(k => (10L + i + j) * (k % 2))))
+
+  /** The queries of one dashboard refresh, after processData. */
+  private val refreshCharts: Seq[DataFrame => DataFrame] = Seq[DataFrame => DataFrame](
+    identity, ChartQueries.emotionDonut, ChartQueries.countsDonut,
+    ChartQueries.positivityByTopic, ChartQueries.positivityBoxplot(_),
+    ChartQueries.latestInputs(_)) ++
+    Seq("date", "date_hour").flatMap(l => Seq[DataFrame => DataFrame](
+      ChartQueries.emotionShare(_, l), ChartQueries.countsPeriod(_, l),
+      ChartQueries.countsTopicPeriod(_, l), ChartQueries.positivityPeriod(_, l),
+      ChartQueries.positivityBoxplot(_, Some(l))))
+
+  test("a second dashboard refresh over other rows compiles no generated class") {
+    def refresh(store: DataFrame): Unit = {
+      val processed = ChartQueries.processData(store)
+      refreshCharts.foreach(chart => chart(processed).collect())
+    }
+    refresh(snapshot(Seq("alpha", "beta", "gamma"),
+      Seq("2022-03-01 10:00:00", "2022-03-01 11:00:00", "2022-03-01 12:00:00")))
+    // same schema, other rows: the refresh's plans are the same, so
+    // every generated class must come from Spark's codegen cache
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    refresh(snapshot(Seq("alpha", "delta", "epsilon", "zeta"),
+      Seq("2022-03-02 08:00:00", "2022-03-02 09:00:00", "2022-03-03 00:00:00")))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled === 0, s"the second refresh compiled $compiled classes")
+  }
 
   test("discrete boxplot matches a plain ⌈p·n⌉ computation on its edge cases") {
     val rows = Seq(
