@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.SparkSession
 
 import graft.functions.GraftExtensions
@@ -16,6 +18,10 @@ import graft.functions.GraftExtensions
   *    instead of as a side effect of every `Tables.events` load;
   *  - a generated-class cache of [[CodegenCacheEntries]] entries, so the
   *    hourly loop compiles its classes once, not once per hour.
+  *
+  * It also holds the two session-scoped helpers the long-lived session
+  * relies on: [[Memo]], for artifacts derived once per session, and
+  * [[withConfs]], for confs set only while one block runs.
   */
 object GraftSession {
 
@@ -46,4 +52,55 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.ui.enabled", "false")
+
+  /** A value derived once per (session, `K`) and reused while that
+    * session lives: a lake family, a trained codebook, a fixture.
+    *
+    * Entries are keyed by session identity, so a stopped session's
+    * entries are never served to a live one, and every [[apply]] first
+    * drops them (a JVM that cycles sessions must not pin their graphs).
+    * The sweep is explicit rather than a weak key: a cached `DataFrame`
+    * holds its session strongly, so a weak key would never clear.
+    *
+    * A build must not re-enter the same memo: a nested
+    * `computeIfAbsent` on one map throws `Recursive update`. Builds
+    * that read another artifact either resolve it before `apply` or
+    * read it from a different memo instance. */
+  final class Memo[K, V] {
+    private val entries = new ConcurrentHashMap[(SparkSession, K), V]()
+
+    /** The value for (`spark`, `key`), built by `build` on first use. */
+    def apply(spark: SparkSession, key: K)(build: => V): V = {
+      entries.keySet().removeIf(_._1.sparkContext.isStopped)
+      entries.computeIfAbsent((spark, key), _ => build)
+    }
+
+    /** Remove every entry of `spark` and return their values, so the
+      * caller can release what they hold (drop a table). */
+    def drop(spark: SparkSession): Seq[V] = {
+      val dropped = Seq.newBuilder[V]
+      entries.entrySet().removeIf { e =>
+        val mine = e.getKey._1 eq spark
+        if (mine) dropped += e.getValue
+        mine
+      }
+      dropped.result()
+    }
+  }
+
+  /** Run `body` with `confs` set on the session, then put every key
+    * back as it was — its earlier explicit value, or unset if it had
+    * none — however `body` ends. */
+  def withConfs[A](spark: SparkSession, confs: Seq[(String, String)])(
+      body: => A): A = {
+    val explicit = spark.conf.getAll
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally confs.foreach { case (k, _) =>
+      explicit.get(k) match {
+        case Some(v) => spark.conf.set(k, v)
+        case None => spark.conf.unset(k)
+      }
+    }
+  }
 }

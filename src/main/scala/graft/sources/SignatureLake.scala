@@ -1,10 +1,11 @@
 package graft.sources
 
-import java.util.concurrent.ConcurrentHashMap
-
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.sketch.BloomFilter
 
+import graft.GraftSession.Memo
 import graft.Tables
 import graft.functions.VectorFunctions.{lshBandBuckets, toDouble}
 import graft.operators.{DedupOps, SimilarityOps}
@@ -44,11 +45,11 @@ import graft.operators.{DedupOps, SimilarityOps}
   *
   * Size is bounded: each relation is O(docs · bands) rows of
   * fixed-width keys per scale factor — no payload text, no vectors
-  * except the bucket ids. Entries are keyed by the owning
-  * SparkSession, so a stopped session's entries are never served to a
-  * live one, and every access sweeps stopped sessions' entries out of
-  * the map; `invalidate` drops a live session's tables (managed drop
-  * deletes the files) when a caller wants a cold re-derivation.
+  * except the bucket ids. Every artifact is memoized per
+  * (session, sfDir, family) through [[graft.GraftSession.Memo]], so a
+  * stopped session's entries are never served to a live one;
+  * `invalidate` drops a live session's tables (managed drop deletes
+  * the files) and artifacts when a caller wants a cold re-derivation.
   */
 object SignatureLake {
 
@@ -60,17 +61,15 @@ object SignatureLake {
     * other. */
   val Buckets = 32
 
-  private final case class Key(session: SparkSession, sfDir: String, family: String)
+  /** Table families by (sfDir, family): (catalog table name, the ONE
+    * table-scan DataFrame served to every consumer — identity-stable so
+    * callers can cheaply observe "same materialization"). */
+  private val cache = new Memo[(String, String), (String, DataFrame)]
 
-  /** (catalog table name, the ONE table-scan DataFrame served to every
-    * consumer — identity-stable so callers can cheaply observe "same
-    * materialization"). */
-  private val cache = new ConcurrentHashMap[Key, (String, DataFrame)]()
-
-  /** Tables written OUTSIDE the memoizing cache (the incremental-index
-    * namespace — rebuilt per call by design), tracked per session so
+  /** Tables written OUTSIDE [[cache]] (post-stream serve tables,
+    * rebuilds, the tombstone lifecycle's tables), by name, so
     * [[invalidate]] can drop them too. */
-  private val extraTables = new ConcurrentHashMap[SparkSession, Set[String]]()
+  private val extraTables = new Memo[String, String]
 
   /** A tombstoned index family's two serving tiers: `served` is the
     * logical view (index read-back ANTI-JOIN tombstones — what queries
@@ -79,48 +78,19 @@ object SignatureLake {
     * rows gone from disk, tombstone store retired). */
   final case class TombstonedLake(served: DataFrame, compacted: DataFrame)
 
-  private val delCache = new ConcurrentHashMap[Key, TombstonedLake]()
+  private val delCache = new Memo[(String, String), TombstonedLake]
 
-  /** Broadcast sketches (the third lake-artifact kind next to
+  /** Broadcast sketches by sfDir (the third lake-artifact kind next to
     * bucketed tables and codebooks) — currently the d09
     * decontamination Bloom filter. */
-  private val bloomCache = new ConcurrentHashMap[Key,
-    org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter]]()
+  private val bloomCache = new Memo[String, Broadcast[BloomFilter]]
 
-  /** Trained codebooks (bounded k·dim driver arrays — the codebook
-    * lake-artifact kind the scaladoc above names). */
-  private val codebookCache = new ConcurrentHashMap[Key, Array[Array[Double]]]()
-
-  /** Drop entries owned by stopped sessions — a session per job in a
-    * long-lived JVM must not accumulate dead (session, DataFrame)
-    * graphs in this static map. (The stopped session's catalog is gone
-    * with it; its warehouse files are orphaned until the next
-    * overwrite, which is the normal lake-GC trade.) */
-  private def evictStopped(): Unit = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      if (it.next().getKey.session.sparkContext.isStopped) it.remove()
-    }
-    val it2 = extraTables.keySet().iterator()
-    while (it2.hasNext) {
-      if (it2.next().sparkContext.isStopped) it2.remove()
-    }
-    val it3 = delCache.entrySet().iterator()
-    while (it3.hasNext) {
-      if (it3.next().getKey.session.sparkContext.isStopped) it3.remove()
-    }
-    val it4 = bloomCache.entrySet().iterator()
-    while (it4.hasNext) {
-      if (it4.next().getKey.session.sparkContext.isStopped) it4.remove()
-    }
-    val it5 = codebookCache.entrySet().iterator()
-    while (it5.hasNext) {
-      if (it5.next().getKey.session.sparkContext.isStopped) it5.remove()
-    }
-  }
+  /** Trained codebooks by sfDir (bounded k·dim driver arrays — the
+    * codebook lake-artifact kind the scaladoc above names). */
+  private val codebookCache = new Memo[String, Array[Array[Double]]]
 
   private def registerExtra(spark: SparkSession, t: String): Unit = {
-    extraTables.merge(spark, Set(t), _ ++ _); ()
+    extraTables(spark, t)(t); ()
   }
 
   /** Deterministic identity of an incremental family's input split:
@@ -150,9 +120,15 @@ object SignatureLake {
   private def sanitize(s: String): String =
     s.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+|_+$", "")
 
-  private[graft] def tableName(spark: SparkSession, sfDir: String, family: String): String =
+  /** The pid- and session-scoped warehouse name of `family` on
+    * `sfDir`. The first call in a JVM also sweeps dead processes'
+    * leftovers ([[sweepOrphans]]), so every writer of a scoped name has
+    * swept before it writes. */
+  private[graft] def tableName(spark: SparkSession, sfDir: String, family: String): String = {
+    sweepOrphans(spark)
     s"graft_lake_${family}_${sanitize(sfDir)}_p${ProcessHandle.current().pid()}" +
       s"_s${Integer.toHexString(System.identityHashCode(spark))}"
+  }
 
   /** A fresh JVM's catalog starts empty, but the WAREHOUSE directory
     * survives process exits — and identityHashCode sequences can
@@ -180,10 +156,8 @@ object SignatureLake {
     * process and session, and the orphan sweep reclaims it once its
     * process is dead. Callers overwrite it per run (bench reps); it is
     * not registered in the catalog. */
-  def scratchPath(spark: SparkSession, sfDir: String, kind: String): String = {
-    sweepOrphans(spark)
+  def scratchPath(spark: SparkSession, sfDir: String, kind: String): String =
     s"${spark.sessionState.conf.warehousePath}/${tableName(spark, sfDir, "scratch_" + kind)}"
-  }
 
   /** Write `df` as a MANAGED bucketed+sorted parquet table — the lake
     * write. SaveMode.Append validates the existing bucket spec, so an
@@ -194,10 +168,9 @@ object SignatureLake {
     * spec, so each write task holds exactly its own bucket). Spark's
     * bucketed write does not do this by itself: each INPUT task
     * writes one file per bucket it happens to hold, so an
-    * AQE-coalesced single-partition input serialized the whole
-    * sort+write through one task (minhash_sigs, measured r16), and a
-    * 32-partition input wrote 32×32 = 1024 tiny files
-    * (minhash_bands, ditto) that every read-back then had to list
+    * AQE-coalesced single-partition input serializes the whole
+    * sort+write through one task, and a 32-partition input writes
+    * 32×32 = 1024 tiny files that every read-back then has to list
     * and open. One exchange at write time buys a parallel write AND
     * one file per bucket — the ingest-time-shuffle trade this lake
     * already advertises, now actually established by the writer. At
@@ -246,16 +219,19 @@ object SignatureLake {
         s"lake orphan sweep failed: ${e.getClass.getName}: ${e.getMessage}")
     }
 
+  /** The lake table of `family` on `sfDir`, memoized per session: the
+    * first call writes `build` under the family's table name and then
+    * runs `append` on that table (an incremental family's delta
+    * write); every call returns the same read-back. */
   private def get(spark: SparkSession, sfDir: String, family: String,
-      bucketCols: Seq[String])(build: => DataFrame): DataFrame = {
-    evictStopped()
-    sweepOrphans(spark)
-    cache.computeIfAbsent(Key(spark, sfDir, family), _ => {
+      bucketCols: Seq[String], append: String => Unit = _ => ())(
+      build: => DataFrame): DataFrame =
+    cache(spark, (sfDir, family)) {
       val t = tableName(spark, sfDir, family)
       writeFamily(build, t, bucketCols, SaveMode.Overwrite)
+      append(t)
       (t, spark.table(t))
-    })._2
-  }
+    }._2
 
   /** Portable MinHash SIGNATURES (doc_id, sig: array<string> hex
     * lanes) — the root relation of the minhash family; the band-key
@@ -275,9 +251,8 @@ object SignatureLake {
     * candidate-pair bucket aggregation — every near-dup consumer's
     * first shuffle — reads this distribution straight off the scan. */
   def portableBandKeys(spark: SparkSession, sfDir: String): DataFrame = {
-    // resolve the root family BEFORE entering the band-keys closure:
-    // ConcurrentHashMap.computeIfAbsent forbids a recursive update of
-    // the same map from inside a mapping function
+    // resolve the root family BEFORE entering the band-keys build: a
+    // memo build must not re-enter its own memo
     val sigs = portableSignatures(spark, sfDir)
     get(spark, sfDir, "minhash_bands", Seq("band", "band_key")) {
       DedupOps.portableBandKeys(sigs)
@@ -289,12 +264,12 @@ object SignatureLake {
     * ([[DedupOps.bandKeys]] ∘ [[DedupOps.minhashSignatures]]),
     * bucketed by (band, band_key) like the portable twin: the
     * candidate-pair bucket aggregation reads its distribution off the
-    * scan. Materialized for the same reason the md5 families were
-    * (r12): a consumer that re-derives the signature pipeline per
-    * execution bills index-BUILD cost to every serve, and bench
-    * timings of unchanged rows swing with whatever ran first. The
-    * signature rides along per band row so the pair stage's
-    * agreement compare never joins back to a second table. */
+    * scan. Materialized like the md5 families: a consumer that
+    * re-derives the signature pipeline per execution bills index-BUILD
+    * cost to every serve, and timings of unchanged rows swing with
+    * whatever ran first. The signature rides along per band row so the
+    * pair stage's agreement compare never joins back to a second
+    * table. */
   def productionBandRows(spark: SparkSession, sfDir: String): DataFrame =
     get(spark, sfDir, "minhash_prod_bands", Seq("band", "band_key")) {
       DedupOps.bandKeys(DedupOps.minhashSignatures(
@@ -306,9 +281,7 @@ object SignatureLake {
     * vocabulary-stats family corpus-stats consumers (t06 top tokens,
     * t07 TF-IDF) read instead of re-tokenizing the corpus per report.
     * The same materialize-don't-rederive rule as the signature
-    * families, for the same measured reason (r13: t06/t07 re-counted
-    * the vocabulary per bench rep and their timings tracked window
-    * heat, not code). */
+    * families: the vocabulary is counted once, not per report. */
   def tokenCounts(spark: SparkSession, sfDir: String): DataFrame =
     get(spark, sfDir, "token_counts", Seq("token")) {
       Tables.documents(spark, sfDir)
@@ -349,18 +322,24 @@ object SignatureLake {
 
   /** Champion tier of [[termImpacts]]: rows with per-term impact rank
     * `pr` ≤ [[graft.operators.SimilarityOps.TierMaxBudget]]
-    * (term, doc_id, s, pr), bucketed by term. The per-term sort — the
-    * one index-build cost that sat on the serve path before r15 — is
-    * paid HERE, once; every serve at any budget ≤ the ceiling is a
-    * bucketed scan + `pr <= budget` filter (budgets nest), so the s30
-    * production serve and the whole s32 curve read this one table. */
+    * (term, doc_id, s, pr), bucketed by term. The per-term sort — an
+    * index-build cost, never a serve cost — is paid HERE, once; every
+    * serve at any budget ≤ the ceiling is a bucketed scan +
+    * `pr <= budget` filter (budgets nest), so the s30 production serve
+    * and the whole s32 curve read this one table. */
   def termChampions(spark: SparkSession, sfDir: String): DataFrame = {
     val si = termImpacts(spark, sfDir)
-    get(spark, sfDir, "term_champions", Seq("term")) {
-      SimilarityOps.bm25ImpactRanked(si)
-        .filter(col("pr") <= SimilarityOps.TierMaxBudget)
-    }
+    get(spark, sfDir, "term_champions", Seq("term"))(championTier(si))
   }
+
+  /** The champion tier of an impact relation: rows of per-term impact
+    * rank `pr` ≤ [[graft.operators.SimilarityOps.TierMaxBudget]]. The
+    * one tier cut shared by [[termChampions]], [[incrementalTermServe]]
+    * and st15's post-stream [[writeTermServeTables]], so it can never
+    * diverge between the batch and streamed serves. */
+  private def championTier(impacts: DataFrame): DataFrame =
+    SimilarityOps.bm25ImpactRanked(impacts)
+      .filter(col("pr") <= SimilarityOps.TierMaxBudget)
 
   /** Memoized decontamination Bloom filter over the benchmark fixture
     * (every 50th document — the d08/d09 eval-suite stand-in): the two
@@ -371,35 +350,31 @@ object SignatureLake {
     * d22/tier attribution rule). A deployment builds this once per
     * benchmark-suite release and serves every decontamination pass
     * off the broadcast. */
-  def decontamBloomFilter(spark: SparkSession, sfDir: String)
-      : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter] = {
-    evictStopped()
-    bloomCache.computeIfAbsent(Key(spark, sfDir, "decontam_bloom"), _ =>
+  def decontamBloomFilter(spark: SparkSession, sfDir: String): Broadcast[BloomFilter] =
+    bloomCache(spark, sfDir) {
       DedupOps.buildDecontamBloom(
-        Tables.documents(spark, sfDir).filter(col("doc_id") % 50 === 0)))
-  }
+        Tables.documents(spark, sfDir).filter(col("doc_id") % 50 === 0))
+    }
 
   /** The full-corpus TRAINED IVF codebook (seeded Lloyd's,
     * [[SimilarityOps.kmeansCentroids]] at the sqrt cell sizing) —
     * memoized per (session, sfDir) as a codebook lake artifact. A
     * production IVF index persists its trained codebook WITH the
     * index (the codebook IS index state — every serve and every
-    * append quantizes against it); before r16 each consumer row
-    * (s04 serve, s19 probe curve, s23's rebuild leg) re-ran the
-    * identical 10-iteration training per execution. Deterministic:
-    * fixed seed, same input relation, so memoization changes no
-    * output — the d09 decontam-Bloom attribution precedent. Timed as
-    * the `ivf_codebook` bench lake_build entry. */
-  def trainedIvfCodebook(spark: SparkSession, sfDir: String): Array[Array[Double]] = {
-    evictStopped()
-    codebookCache.computeIfAbsent(Key(spark, sfDir, "ivf_codebook"), _ => {
+    * append quantizes against it), so the consumer rows (s04 serve,
+    * s19 probe curve, s23's rebuild leg) share one 10-iteration
+    * training instead of each re-running it. Deterministic: fixed
+    * seed, same input relation, so memoization changes no output —
+    * the d09 decontam-Bloom attribution precedent. Timed as the
+    * `ivf_codebook` bench lake_build entry. */
+  def trainedIvfCodebook(spark: SparkSession, sfDir: String): Array[Array[Double]] =
+    codebookCache(spark, sfDir) {
       val emb = Tables.embeddings(spark, sfDir)
         .select(col("vec_id"), toDouble(col("embedding")).as("v"))
       val n = emb.count()
       SimilarityOps.kmeansCentroids(emb,
         SimilarityOps.cellsForCorpus(n), knownN = Some(n))
-    })
-  }
+    }
 
   /** Portable SimHash fingerprints (doc_id, sh0, sh1), bucketed by
     * doc_id (pigeonhole band keys are derived per-radius downstream —
@@ -429,8 +404,8 @@ object SignatureLake {
     }
 
   /** Perceptual-hash relation (doc_id, phash) over the phash audit
-    * universe — the m05/m09 shared derivation (each row decoded the
-    * payload bytes independently before r17), bucketed by doc_id (the
+    * universe — the m05/m09 shared derivation (the payload bytes are
+    * decoded once, not once per row), bucketed by doc_id (the
     * pigeonhole band keys are derived per-radius downstream; doc_id is
     * the one stable key — the simhash_fp convention). */
   def perceptualHashes(spark: SparkSession, sfDir: String): DataFrame =
@@ -486,12 +461,11 @@ object SignatureLake {
     * `delta` batch — the d12 registry row's index path, in a private
     * `inc_bands` namespace so the shared full-corpus families above
     * are never clobbered. The build+append sequence is memoized per
-    * (session, sfDir) like every other family — the d12 and d23 rows
-    * pass the same deterministic slices, so the first consumer pays
-    * the overwrite+append and later calls (including bench reps) read
-    * the table back (each row previously re-derived the md5 family
-    * twice per pass: 7.8 s + 5.1 s in the r10 bench, the two most
-    * expensive rows). `invalidate` forces a cold rebuild; a long-lived
+    * (session, sfDir, slice, split) like every other family — the d12
+    * and d23 rows pass the same deterministic slices, so the first
+    * consumer pays the overwrite+append and later calls (including
+    * bench reps) read the table back instead of hashing the corpus
+    * again. `invalidate` forces a cold rebuild; a long-lived
     * deployment calls [[appendBandDelta]] alone per ingest. Returns
     * the read-back of the UPDATED table: base ∪ delta band keys,
     * still bucketed. */
@@ -500,18 +474,11 @@ object SignatureLake {
     *        different splits can never silently share one table */
   def incrementalBandIndex(spark: SparkSession, sfDir: String,
       base: DataFrame, delta: DataFrame,
-      slice: String = "mod10"): DataFrame = {
-    evictStopped()
-    sweepOrphans(spark)
-    val fam = s"inc_bands_${slice}_${splitKey(base, delta)}"
-    cache.computeIfAbsent(Key(spark, sfDir, fam), _ => {
-      val t = tableName(spark, sfDir, fam)
-      writeFamily(DedupOps.portableBandKeys(DedupOps.portableSignatures(base)),
-        t, Seq("band", "band_key"), SaveMode.Overwrite)
-      appendBandDelta(spark, t, delta)
-      (t, spark.table(t))
-    })._2
-  }
+      slice: String = "mod10"): DataFrame =
+    get(spark, sfDir, s"inc_bands_${slice}_${splitKey(base, delta)}",
+        Seq("band", "band_key"), appendBandDelta(spark, _, delta)) {
+      DedupOps.portableBandKeys(DedupOps.portableSignatures(base))
+    }
 
   // ------------------------------------------------------------------
   // Incremental ANN maintenance (the d20 ingest path)
@@ -582,18 +549,11 @@ object SignatureLake {
     * is an order-independent per-term window. */
   def incrementalTermPostings(spark: SparkSession, sfDir: String,
       base: DataFrame, delta: DataFrame,
-      slice: String = "mod10"): DataFrame = {
-    evictStopped()
-    sweepOrphans(spark)
-    val fam = s"inc_terms_${slice}_${splitKey(base, delta)}"
-    cache.computeIfAbsent(Key(spark, sfDir, fam), _ => {
-      val t = tableName(spark, sfDir, fam)
-      writeFamily(graft.operators.SimilarityOps.bm25Postings(base),
-        t, Seq("term"), SaveMode.Overwrite)
-      appendTermPostings(spark, t, delta)
-      (t, spark.table(t))
-    })._2
-  }
+      slice: String = "mod10"): DataFrame =
+    get(spark, sfDir, s"inc_terms_${slice}_${splitKey(base, delta)}",
+        Seq("term"), appendTermPostings(spark, _, delta)) {
+      SimilarityOps.bm25Postings(base)
+    }
 
   /** The two serve-side materializations over a term-posting lake:
     * the snapped impact relation and its champion tier (rows carry
@@ -615,31 +575,11 @@ object SignatureLake {
       slice: String = "mod10"): TermServeLake = {
     val lake = incrementalTermPostings(spark, sfDir, base, delta, slice)
     val sk = splitKey(base, delta)
-    val si = cache.computeIfAbsent(Key(spark, sfDir, s"inc_term_si_${slice}_$sk"), _ => {
-      val t = tableName(spark, sfDir, s"inc_term_si_${slice}_$sk")
-      writeImpactsTable(lake, t)
-      (t, spark.table(t))
-    })._2
-    val tier = cache.computeIfAbsent(Key(spark, sfDir, s"inc_term_tier_${slice}_$sk"), _ => {
-      val t = tableName(spark, sfDir, s"inc_term_tier_${slice}_$sk")
-      writeTierTable(si, t)
-      (t, spark.table(t))
-    })._2
-    TermServeLake(si, tier)
+    val si = get(spark, sfDir, s"inc_term_si_${slice}_$sk", Seq("term"))(
+      SimilarityOps.bm25Impacts(lake))
+    TermServeLake(si,
+      get(spark, sfDir, s"inc_term_tier_${slice}_$sk", Seq("term"))(championTier(si)))
   }
-
-  /** The ONE statement of the two serve-side materialization writes —
-    * shared by the memoized incremental family and st15's explicit
-    * post-stream write, so the tier cut can never diverge between the
-    * batch and streamed serves. */
-  private def writeImpactsTable(postings: DataFrame, table: String): Unit =
-    writeFamily(SimilarityOps.bm25Impacts(postings), table, Seq("term"),
-      SaveMode.Overwrite)
-
-  private def writeTierTable(impacts: DataFrame, table: String): Unit =
-    writeFamily(SimilarityOps.bm25ImpactRanked(impacts)
-        .filter(col("pr") <= SimilarityOps.TierMaxBudget),
-      table, Seq("term"), SaveMode.Overwrite)
 
   /** [[incrementalTermServe]] for an EXPLICIT posting table (st15's
     * streamed lake): derive + write `<table>_si` and `<table>_tier`
@@ -649,10 +589,11 @@ object SignatureLake {
   def writeTermServeTables(spark: SparkSession,
       postingTable: String): TermServeLake = {
     val siT = s"${postingTable}_si"
-    writeImpactsTable(spark.table(postingTable), siT)
+    writeFamily(SimilarityOps.bm25Impacts(spark.table(postingTable)), siT,
+      Seq("term"), SaveMode.Overwrite)
     registerExtra(spark, siT)
     val tierT = s"${postingTable}_tier"
-    writeTierTable(spark.table(siT), tierT)
+    writeFamily(championTier(spark.table(siT)), tierT, Seq("term"), SaveMode.Overwrite)
     registerExtra(spark, tierT)
     TermServeLake(spark.table(siT), spark.table(tierT))
   }
@@ -671,17 +612,9 @@ object SignatureLake {
     * distribution with zero exchange. */
   def incrementalAnnPostings(spark: SparkSession, sfDir: String,
       base: DataFrame, delta: DataFrame,
-      slice: String = "mod10"): DataFrame = {
-    evictStopped()
-    sweepOrphans(spark)
-    val fam = s"inc_ann_${slice}_${splitKey(base, delta)}"
-    cache.computeIfAbsent(Key(spark, sfDir, fam), _ => {
-      val t = tableName(spark, sfDir, fam)
-      writeFamily(annPostings(base), t, Seq("tbl", "bucket"), SaveMode.Overwrite)
-      appendEmbeddingDelta(spark, t, delta)
-      (t, spark.table(t))
-    })._2
-  }
+      slice: String = "mod10"): DataFrame =
+    get(spark, sfDir, s"inc_ann_${slice}_${splitKey(base, delta)}",
+        Seq("tbl", "bucket"), appendEmbeddingDelta(spark, _, delta))(annPostings(base))
 
   /** Assign the `delta` batch's vectors to their nearest cell under an
     * EXPLICIT (frozen) codebook and APPEND the posting rows to an
@@ -709,18 +642,12 @@ object SignatureLake {
   def incrementalIvfPostings(spark: SparkSession, sfDir: String,
       base: DataFrame, delta: DataFrame,
       slice: String = "mod10"): DataFrame = {
-    evictStopped()
-    sweepOrphans(spark)
-    val fam = s"inc_ivf_${slice}_${splitKey(base, delta)}"
-    cache.computeIfAbsent(Key(spark, sfDir, fam), _ => {
-      val t = tableName(spark, sfDir, fam)
-      val cb = SimilarityOps.centroids(base,
-        SimilarityOps.cellsForCorpus(base.count()))
-      writeFamily(SimilarityOps.cellAssignments(base, cb),
-        t, Seq("cell"), SaveMode.Overwrite)
-      appendIvfDelta(spark, t, delta, cb)
-      (t, spark.table(t))
-    })._2
+    lazy val cb = SimilarityOps.centroids(base,
+      SimilarityOps.cellsForCorpus(base.count()))
+    get(spark, sfDir, s"inc_ivf_${slice}_${splitKey(base, delta)}",
+        Seq("cell"), appendIvfDelta(spark, _, delta, cb)) {
+      SimilarityOps.cellAssignments(base, cb)
+    }
   }
 
   /** SEMANTIC-CELL lake for incremental SemDeDup (d33): embed the
@@ -735,20 +662,20 @@ object SignatureLake {
   def incrementalSemCells(spark: SparkSession, sfDir: String,
       base: DataFrame, delta: DataFrame,
       slice: String = "mod10"): DataFrame = {
-    evictStopped()
-    sweepOrphans(spark)
-    val fam = s"inc_semcells_${slice}_${splitKey(base, delta)}"
-    cache.computeIfAbsent(Key(spark, sfDir, fam), _ => {
-      val t = tableName(spark, sfDir, fam)
-      val bv = DedupOps.semDedupEmbed(base)
-      val cb = DedupOps.semDedupCodebook(bv, bv.count())
-      writeFamily(DedupOps.semDedupAssign(bv, cb), t, Seq("cell"),
-        SaveMode.Overwrite)
-      writeFamily(DedupOps.semDedupAssign(DedupOps.semDedupEmbed(delta), cb),
-        t, Seq("cell"), SaveMode.Append)
-      (t, spark.table(t))
-    })._2
+    lazy val bv = DedupOps.semDedupEmbed(base)
+    lazy val cb = DedupOps.semDedupCodebook(bv, bv.count())
+    get(spark, sfDir, s"inc_semcells_${slice}_${splitKey(base, delta)}",
+        Seq("cell"), appendSemCells(_, delta, cb)) {
+      DedupOps.semDedupAssign(bv, cb)
+    }
   }
+
+  /** Append `delta`'s semantic-cell assignments under the frozen
+    * codebook `cb` to the cell-bucketed table `table`. */
+  private def appendSemCells(table: String, delta: DataFrame,
+      cb: Array[Array[Double]]): Unit =
+    writeFamily(DedupOps.semDedupAssign(DedupOps.semDedupEmbed(delta), cb),
+      table, Seq("cell"), SaveMode.Append)
 
   /** LABELED IVF posting index (build + append, frozen codebook) —
     * the filtered-ANN attribute-in-index family: every posting row
@@ -760,19 +687,13 @@ object SignatureLake {
   def incrementalIvfPostingsLabeled(spark: SparkSession, sfDir: String,
       base: DataFrame, delta: DataFrame,
       slice: String = "mod10"): DataFrame = {
-    evictStopped()
-    sweepOrphans(spark)
-    val fam = s"inc_ivf_lbl_${slice}_${splitKey(base, delta)}"
-    cache.computeIfAbsent(Key(spark, sfDir, fam), _ => {
-      val t = tableName(spark, sfDir, fam)
-      val cb = SimilarityOps.centroids(base,
-        SimilarityOps.cellsForCorpus(base.count()))
-      writeFamily(SimilarityOps.cellAssignments(base, cb, Seq("label")),
-        t, Seq("cell"), SaveMode.Overwrite)
-      writeFamily(SimilarityOps.cellAssignments(delta, cb, Seq("label")),
-        t, Seq("cell"), SaveMode.Append)
-      (t, spark.table(t))
-    })._2
+    lazy val cb = SimilarityOps.centroids(base,
+      SimilarityOps.cellsForCorpus(base.count()))
+    get(spark, sfDir, s"inc_ivf_lbl_${slice}_${splitKey(base, delta)}", Seq("cell"),
+        t => writeFamily(SimilarityOps.cellAssignments(delta, cb, Seq("label")),
+          t, Seq("cell"), SaveMode.Append)) {
+      SimilarityOps.cellAssignments(base, cb, Seq("label"))
+    }
   }
 
   /** IVF REBUILD — the operation the s23 crossover row prices against
@@ -785,8 +706,6 @@ object SignatureLake {
     * index. */
   def rebuildIvfPostings(spark: SparkSession, sfDir: String, emb: DataFrame,
       slice: String = "full"): (DataFrame, Array[Array[Double]]) = {
-    evictStopped()
-    sweepOrphans(spark)
     val n = emb.count()
     val cb = SimilarityOps.kmeansCentroids(emb,
       SimilarityOps.cellsForCorpus(n), knownN = Some(n))
@@ -903,10 +822,8 @@ object SignatureLake {
   private def tombstonedFamily(spark: SparkSession, sfDir: String,
       family: String, bucketCols: Seq[String], idCol: String,
       deleted: DataFrame)(build: => DataFrame)(
-      append: String => Unit): TombstonedLake = {
-    evictStopped()
-    sweepOrphans(spark)
-    delCache.computeIfAbsent(Key(spark, sfDir, family), _ => {
+      append: String => Unit): TombstonedLake =
+    delCache(spark, (sfDir, family)) {
       val t = tableName(spark, sfDir, family)
       writeFamily(build, t, bucketCols, SaveMode.Overwrite)
       append(t)
@@ -916,8 +833,7 @@ object SignatureLake {
       TombstonedLake(served,
         rewriteWithoutTombstones(spark, t, tt, idCol, bucketCols,
           retireTombstones = false))
-    })
-  }
+    }
 
   /** Band-key index under the full lifecycle: d12's build+append writes
     * followed by a tombstone batch for `deleted` doc ids and the
@@ -1014,8 +930,7 @@ object SignatureLake {
         s"del_semcells_${slice}_${splitKey(base, delta, deleted)}",
         Seq("cell"), "doc_id", deleted)(
       DedupOps.semDedupAssign(bv, cb))(
-      t => writeFamily(DedupOps.semDedupAssign(DedupOps.semDedupEmbed(delta), cb),
-        t, Seq("cell"), SaveMode.Append))
+      appendSemCells(_, delta, cb))
   }
 
   /** The shared lake families, by name, in build order: Bench times
@@ -1038,27 +953,15 @@ object SignatureLake {
     "phash" -> perceptualHashes)
 
   /** Drop (and delete — managed tables) every lake table owned by
-    * `spark`. */
+    * `spark`, and retire its other artifacts with them: a session that
+    * invalidates the lake and regenerates its inputs must never be
+    * served a Bloom filter, codebook or tombstoned lake derived from
+    * the earlier inputs. */
   def invalidate(spark: SparkSession): Unit = {
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.session eq spark) {
-        spark.sql(s"DROP TABLE IF EXISTS ${e.getValue._1}")
-        it.remove()
-      }
-    }
-    val itDel = delCache.keySet().iterator()
-    while (itDel.hasNext) { if (itDel.next().session eq spark) itDel.remove() }
-    // the broadcast/codebook artifacts must retire WITH the tables
-    // (r17, advisor): a session that invalidates the lake and
-    // regenerates its inputs would otherwise be served a stale trained
-    // codebook / Bloom filter from the pre-invalidation derivation
-    val itB = bloomCache.keySet().iterator()
-    while (itB.hasNext) { if (itB.next().session eq spark) itB.remove() }
-    val itC = codebookCache.keySet().iterator()
-    while (itC.hasNext) { if (itC.next().session eq spark) itC.remove() }
-    Option(extraTables.remove(spark)).foreach(_.foreach(t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")))
+    cache.drop(spark).foreach { case (t, _) => spark.sql(s"DROP TABLE IF EXISTS $t") }
+    delCache.drop(spark)
+    bloomCache.drop(spark)
+    codebookCache.drop(spark)
+    extraTables.drop(spark).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, GraftSession, Tables}
 import graft.functions.Relational.localize
 import graft.operators.TemporalOps
 import StatefulOps.{AttrEvent, TypedEvent}
@@ -134,22 +134,6 @@ object StreamReplay {
   private def scratchTable(spark: SparkSession, sf: String, kind: String): String =
     s"${graft.sources.SignatureLake.tableName(spark, sf, kind)}_${nameCounter.incrementAndGet()}"
 
-  /** Run `body` with `confs` set on the session, then put every key
-    * back as it was — its earlier explicit value, or unset if it had
-    * none — however `body` ends. */
-  private def withConfs[A](spark: SparkSession, confs: Seq[(String, String)])(
-      body: => A): A = {
-    val explicit = spark.conf.getAll
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally confs.foreach { case (k, _) =>
-      explicit.get(k) match {
-        case Some(v) => spark.conf.set(k, v)
-        case None => spark.conf.unset(k)
-      }
-    }
-  }
-
   /** st12's streamed ingest unit (explicit product encoder — tuple
     * encoders for Seq-valued fields don't derive inside the lambda). */
   final case class EmbRow(vec_id: Long, v: Seq[Double])
@@ -157,19 +141,15 @@ object StreamReplay {
 
   /** Collected schedules memoized per (session, sf): all st* rows
     * replay the SAME slice, so the sort+collect job runs once and the
-    * later rows start at addData (the SignatureLake first-consumer
-    * pattern, driver-side because a replay schedule is driver data by
-    * nature — the slice is a bounded audit fixture). Entries of
-    * stopped sessions are swept on access. */
-  private val schedCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Seq[Seq[TypedEvent]]]()
+    * later rows start at addData (driver-side, because a replay
+    * schedule is driver data by nature — the slice is a bounded audit
+    * fixture). */
+  private val schedules = new GraftSession.Memo[String, Seq[Seq[TypedEvent]]]
 
   /** The sorted, sliced, intra-batch-reversed replay schedule plus the
     * two watermark-flushing sentinel batches. */
-  private def schedule(spark: SparkSession, sf: String): Seq[Seq[TypedEvent]] = {
-    val it = schedCache.keySet().iterator()
-    while (it.hasNext) { if (it.next()._1.sparkContext.isStopped) it.remove() }
-    schedCache.computeIfAbsent((spark, sf), _ => {
+  private def schedule(spark: SparkSession, sf: String): Seq[Seq[TypedEvent]] =
+    schedules(spark, sf) {
       import spark.implicits._
       val evs = Tables.events(spark, sf)
         .filter(col("user_id") % UserMod === 0)
@@ -184,8 +164,7 @@ object StreamReplay {
       chunks ++ Seq(
         Seq(TypedEvent(-1L, SentinelUser, "__flush", new Timestamp(maxMs + 2 * day))),
         Seq(TypedEvent(-2L, SentinelUser, "__flush", new Timestamp(maxMs + 4 * day))))
-    })
-  }
+    }
 
   /** The session confs st01–st11 replay under, restored afterwards:
     *  - one shuffle partition: state-store commit cost is per partition
@@ -230,7 +209,7 @@ object StreamReplay {
       mapBatch: Seq[TypedEvent] => Seq[TypedEvent] = identity,
       coarse: Boolean = false)(
       build: Dataset[TypedEvent] => Dataset[O]): DataFrame =
-    withConfs(spark, ReplayConfs) {
+    GraftSession.withConfs(spark, ReplayConfs) {
       import spark.implicits._
       val sched = schedule(spark, sf)
       val batches =

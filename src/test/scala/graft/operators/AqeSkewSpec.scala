@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{GraftSession, SparkSpec}
 
 /** AQE skew-join handling — the runtime half of the 100 TB skew story.
   *
@@ -21,24 +21,15 @@ class AqeSkewSpec extends SparkSpec {
 
   test("AQE splits the skewed partition of a sort-merge join at runtime") {
     import spark.implicits._
-    val saved = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize")
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      // force a shuffle join so the skew question is real, and shrink
-      // the skew thresholds so a ~10 MB local fixture crosses them
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "262144")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "65536")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16384")
-
+    // force a shuffle join so the skew question is real, and shrink
+    // the skew thresholds so a ~10 MB local fixture crosses them
+    GraftSession.withConfs(spark, Seq(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "262144",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "65536",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16384")) {
       // 99% of the left side lands on key 0 → one shuffle partition
       // holds ~14 MB while the median holds a few KB; the payload is
       // id-dependent so constant folding cannot drop it from the
@@ -63,8 +54,6 @@ class AqeSkewSpec extends SparkSpec {
       assert(finalPlan.contains("SortMergeJoin"), finalPlan)
       assert(finalPlan.contains("skew=true"),
         s"AQE did not mark the hot-key join skewed:\n$finalPlan")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-import graft.{SparkEntry, SparkSpec}
+import graft.{GraftSession, SparkEntry, SparkSpec}
 
 /** Shuffle-partition-sweep float-parity fuzz over the oracled registry.
   *
@@ -78,36 +78,29 @@ class FloatParitySpec extends SparkSpec {
     val oracled = SparkEntry.oracleSql.keySet
     val runs = SparkEntry.queries.filter { case (n, _) => oracled(n) }.toSeq.sortBy(_._1)
 
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevBytes = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     var floaty = 0
-    val failures = try {
-      runs.flatMap { case (name, run) =>
-        // the schema check rides the FIRST config's construction —
-        // building some queries is eager (codebook fits, bounded
-        // collects), so don't construct once more just to peek
-        val hashes = configs.foldLeft(List.empty[(String, String)]) {
-          case (acc, (label, parts, bytes, aqe)) if acc.nonEmpty || label == configs.head._1 =>
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
-            spark.conf.set("spark.sql.files.maxPartitionBytes", bytes)
-            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    val failures = runs.flatMap { case (name, run) =>
+      // the schema check rides the FIRST config's construction —
+      // building some queries is eager (codebook fits, bounded
+      // collects), so don't construct once more just to peek
+      val hashes = configs.foldLeft(List.empty[(String, String)]) {
+        case (acc, (label, parts, bytes, aqe)) if acc.nonEmpty || label == configs.head._1 =>
+          GraftSession.withConfs(spark, Seq(
+              "spark.sql.shuffle.partitions" -> parts.toString,
+              "spark.sql.files.maxPartitionBytes" -> bytes,
+              "spark.sql.adaptive.enabled" -> aqe.toString)) {
             val df = run(spark, sfDir)
             if (acc.isEmpty && !hasFloaty(df.schema)) acc // skip non-floaty
             else (label -> canonical(df)) :: acc
-          case (acc, _) => acc
-        }.reverse
-        if (hashes.nonEmpty) floaty += 1
-        if (hashes.map(_._2).distinct.size <= 1) None
-        else {
-          val diverging = hashes.groupBy(_._2).values.map(_.map(_._1).mkString("/")).mkString(" vs ")
-          Some(s"$name diverges across plan-parallelism settings: $diverging")
-        }
+          }
+        case (acc, _) => acc
+      }.reverse
+      if (hashes.nonEmpty) floaty += 1
+      if (hashes.map(_._2).distinct.size <= 1) None
+      else {
+        val diverging = hashes.groupBy(_._2).values.map(_.map(_._1).mkString("/")).mkString(" vs ")
+        Some(s"$name diverges across plan-parallelism settings: $diverging")
       }
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      spark.conf.set("spark.sql.files.maxPartitionBytes", prevBytes)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
     }
     assert(floaty > 0, "target selection broke — no float-emitting oracled queries found")
 

@@ -32,6 +32,40 @@ class SignatureLakeSpec extends SparkSpec {
     SignatureLake.invalidate(spark)
   }
 
+  test("invalidate retires every artifact kind") {
+    SignatureLake.invalidate(spark)
+    val docs = Tables.documents(spark, sf001)
+    def tombstoned(): SignatureLake.TombstonedLake =
+      SignatureLake.tombstonedTermPostings(spark, sf001,
+        base = docs.filter(col("doc_id") % 10 =!= 7),
+        delta = docs.filter(col("doc_id") % 10 === 7),
+        deleted = docs.filter(col("doc_id") % DedupOps.TombMod === DedupOps.TombRem)
+          .select("doc_id"))
+    def lakeTables(): Set[String] = spark.catalog.listTables().collect()
+      .map(_.name).filter(_.startsWith("graft_lake_")).toSet
+
+    val bloom = SignatureLake.decontamBloomFilter(spark, sf001)
+    val codebook = SignatureLake.trainedIvfCodebook(spark, sf001)
+    val lake = tombstoned()
+    assert(SignatureLake.decontamBloomFilter(spark, sf001) eq bloom)
+    assert(SignatureLake.trainedIvfCodebook(spark, sf001) eq codebook)
+    assert(tombstoned() eq lake)
+    // an extra (un-memoized) table pair over the lifecycle's rewrite
+    val g2 = lakeTables().filter(n => n.startsWith("graft_lake_del_terms_") && n.endsWith("_g2"))
+    assert(g2.size === 1, lakeTables())
+    SignatureLake.writeTermServeTables(spark, g2.head)
+    assert(Set(g2.head + "_si", g2.head + "_tier").subsetOf(lakeTables()))
+
+    SignatureLake.invalidate(spark)
+    assert(lakeTables().isEmpty, "invalidate must drop every lake table, extra tables included")
+    assert(SignatureLake.decontamBloomFilter(spark, sf001) ne bloom,
+      "invalidate must retire the Bloom filter")
+    assert(SignatureLake.trainedIvfCodebook(spark, sf001) ne codebook,
+      "invalidate must retire the trained codebook")
+    assert(tombstoned() ne lake, "invalidate must retire the tombstoned lake")
+    SignatureLake.invalidate(spark)
+  }
+
   test("bucketed lake write emits at most one data file per bucket (r16 layout fix)") {
     SignatureLake.invalidate(spark)
     // bands: the family that exploded to (tasks x buckets) files before
